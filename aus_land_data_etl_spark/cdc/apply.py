@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aus_land_data_etl_spark.cdc.events import PAGES_SCHEMA
@@ -44,7 +44,7 @@ DEFAULT_SALTS = 0
 def write_dead_letters(
     table: LakeTable, events: DataFrame, epoch: int | str,
     registry: SchemaRegistry,
-) -> int:
+) -> None:
     """Persist events the registry cannot project (unknown
     ``schema_version``) under ``<root>/_dead_letter/e<epoch>/``.
 
@@ -55,20 +55,16 @@ def write_dead_letters(
     envelope, byte-complete html) for replay once the registry learns
     the version.  The write is keyed by epoch and ``overwrite``-mode, so
     a crash-retry of the same batch leaves one copy (same idempotency
-    class as the commit itself).  Cost: one column-pruned count scan per
-    batch, plus a full write only when dead rows exist (the common case
-    writes nothing).
+    class as the commit itself).  Cost: none in the common case —
+    ``apply_batch`` counts dead rows as an ``observe()`` metric of its
+    manifest job and calls this only when there are some.
     """
-    dead = registry.dead_letter(events)
-    n = dead.count()
-    if n:
-        import os
-        import re as _re
+    import os
+    import re as _re
 
-        safe = _re.sub(r"[^A-Za-z0-9_.-]", "_", str(epoch))[:64]
-        out = os.path.join(table.root, "_dead_letter", f"e{safe}")
-        dead.write.mode("overwrite").parquet(out)
-    return n
+    safe = _re.sub(r"[^A-Za-z0-9_.-]", "_", str(epoch))[:64]
+    out = os.path.join(table.root, "_dead_letter", f"e{safe}")
+    registry.dead_letter(events).write.mode("overwrite").parquet(out)
 
 
 def read_dead_letters(table: LakeTable) -> DataFrame:
@@ -219,7 +215,7 @@ def manifest_frame(
     lineage keeps the coarser one-row-per-namespace form (the audit
     oracle's granularity).
     """
-    from aus_land_data_etl_spark.lake.table import bucket_expr
+    from aus_land_data_etl_spark.lake.table import bucket_sql
 
     # The row hash MUST include the total-order tiebreak (event_id):
     # hashing only (url, warc_ts, op) made two distinct events sharing
@@ -228,9 +224,7 @@ def manifest_frame(
     # second batch was falsely skipped (silent event loss — caught by
     # tests/test_property_lww.py).  event_id is unique per event, so it
     # also covers patch payloads (_set_cols/html/lang) implicitly.
-    row_hash = F.xxhash64(
-        "url", F.col("warc_ts").cast("string"), "op", "event_id"
-    )
+    row_hash = "xxhash64(url, CAST(warc_ts AS STRING), op, event_id)"
     # Multiset checksum: SUM of row hashes mod 2^64, NOT xor.  xor
     # self-cancels under at-least-once duplication — a batch holding the
     # same event twice xors to 0, so {e,e} and {e',e'} collide and the
@@ -238,62 +232,57 @@ def manifest_frame(
     # 2^64 is equally commutative/associative (runs re-fold) but
     # duplicate-sensitive: k copies contribute k·h.  decimal(38,0)
     # accumulation keeps the sum exact under Spark's ANSI overflow rules
-    # for any feasible batch size (10^10 rows × 2^63 < 10^38).
-    _two64 = F.lit("18446744073709551616").cast("decimal(38,0)")
-    msum = lambda c: F.conv(  # noqa: E731
-        F.pmod(F.sum(c.cast("decimal(38,0)")), _two64).cast("decimal(38,0)")
-        .cast("string"),
-        10,
-        16,
+    # for any feasible batch size (10^10 rows × 2^63 < 10^38).  Written
+    # as SQL text: one parse per aggregate instead of a Column tree.
+    msum = lambda c: (  # noqa: E731
+        f"pmod(sum(CAST({c} AS DECIMAL(38,0))), "
+        "CAST('18446744073709551616' AS DECIMAL(38,0)))"
     )
+    checksum = lambda c: (  # noqa: E731
+        f"conv(CAST(CAST({msum(c)} AS DECIMAL(38,0)) AS STRING), 10, 16) AS checksum"
+    )
+    # The offset namespace is the COMPOSITE (source_file, source_partition):
+    # a late/backfill segment arrives as a different file whose offsets
+    # restart and must not alias the main shard's applied prefix.
+    ns = ["source_partition", "source_file"]
+    # ONE exchange: every aggregate below (the distinct-offset count's two
+    # phases; per offset, the run window and per run) clusters on a
+    # superset of the namespace, so all reuse this partitioning — the
+    # window funnels each namespace into one task anyway
+    batch = batch.repartition(*ns)
+    buckets = None
+    if n_buckets is not None:
+        buckets = f"collect_set({bucket_sql('url', n_buckets)})"
     if not runs:
         aggs = [
-            F.min("source_offset").alias("start_offset"),
-            F.max("source_offset").alias("end_offset"),
-            F.count("*").alias("row_count"),
+            "min(source_offset) AS start_offset",
+            "max(source_offset) AS end_offset",
+            "count(*) AS row_count",
             # density evidence for the offset watermark: at-least-once
             # transport duplicates inflate row_count, so contiguity is
             # proven on the distinct-offset count instead
-            F.countDistinct("source_offset").alias("distinct_offsets"),
-            msum(row_hash).alias("checksum"),
-        ]
-        if n_buckets is not None:
-            aggs.append(
-                F.collect_set(bucket_expr("url", n_buckets)).alias("buckets")
-            )
-        # The offset namespace is the COMPOSITE (source_file,
-        # source_partition): a late/backfill segment arrives as a different
-        # file whose offsets restart and must not alias the main shard's
-        # applied prefix.
-        return batch.groupBy("source_partition", "source_file").agg(*aggs)
+            "count(DISTINCT source_offset) AS distinct_offsets",
+            checksum(row_hash),
+        ] + ([f"{buckets} AS buckets"] if buckets else [])
+        return batch.groupBy(*ns).agg(*map(F.expr, aggs))
 
-    from pyspark.sql import Window
-
-    ns = ["source_partition", "source_file"]
-    per_off_aggs = [
-        F.count("*").alias("n_rows"),
-        # modular sum is associative: runs re-fold (see msum above)
-        F.pmod(F.sum(row_hash.cast("decimal(38,0)")), _two64).alias("h"),
-    ]
-    if n_buckets is not None:
-        per_off_aggs.append(
-            F.collect_set(bucket_expr("url", n_buckets)).alias("bs")
-        )
-    per_off = batch.groupBy(*ns, "source_offset").agg(*per_off_aggs)
-    rn = F.row_number().over(Window.partitionBy(*ns).orderBy("source_offset"))
-    runs_df = per_off.withColumn("_run", F.col("source_offset") - rn)
+    # modular sum is associative: runs re-fold (see msum above)
+    per_off_aggs = ["count(*) AS n_rows", f"{msum(row_hash)} AS h"] + (
+        [f"{buckets} AS bs"] if buckets else []
+    )
+    per_off = batch.groupBy(*ns, "source_offset").agg(*map(F.expr, per_off_aggs))
+    runs_df = per_off.withColumn("_run", F.expr(
+        "source_offset - row_number() OVER "
+        "(PARTITION BY source_partition, source_file ORDER BY source_offset)"
+    ))
     aggs = [
-        F.min("source_offset").alias("start_offset"),
-        F.max("source_offset").alias("end_offset"),
-        F.sum("n_rows").alias("row_count"),
-        F.count("*").alias("distinct_offsets"),  # dense by construction
-        msum(F.col("h")).alias("checksum"),
-    ]
-    if n_buckets is not None:
-        aggs.append(
-            F.array_distinct(F.flatten(F.collect_list("bs"))).alias("buckets")
-        )
-    return runs_df.groupBy(*ns, "_run").agg(*aggs).drop("_run")
+        "min(source_offset) AS start_offset",
+        "max(source_offset) AS end_offset",
+        "sum(n_rows) AS row_count",
+        "count(*) AS distinct_offsets",  # dense by construction
+        checksum("h"),
+    ] + (["array_distinct(flatten(collect_list(bs))) AS buckets"] if buckets else [])
+    return runs_df.groupBy(*ns, "_run").agg(*map(F.expr, aggs)).drop("_run")
 
 
 def compute_manifest(
@@ -350,7 +339,7 @@ def prepare_batch(events: DataFrame, registry: SchemaRegistry | None = None) -> 
     return canon.withColumn(
         "lang",
         F.when(F.col("op") == "delete", F.lit(None).cast("string")).otherwise(
-            F.coalesce(F.col("lang"), lang_id(F.col("text")))
+            F.coalesce(F.col("lang"), lang_id("text"))
         ),
     )
 
@@ -429,19 +418,31 @@ def apply_batch(
     snap = table.snapshot()
     if not content_keyed and snap.is_applied(epoch_id):
         return snap.version  # replayed batch: no-op (exactly-once)
+    scanned = events
     if dead_letter:
-        # quarantine unknown-schema events BEFORE the valid-only
-        # projection silently drops them (overwrite by epoch: replay-safe)
-        write_dead_letters(table, events, epoch, registry)
+        # count unknown-schema events BEFORE the valid-only projection
+        # drops them, as a metric of the manifest job (no job of its own)
+        dead = Observation()
+        scanned = events.observe(dead, F.count_if(registry.unknown()).alias("n"))
     # No persist: the manifest aggregation reads only envelope columns, so
     # Catalyst's column pruning drops the (deterministic) extraction UDF
     # from that job entirely — the expensive html→text pass runs exactly
     # once, inside the merge write.  (Persisting here would force a full
     # materialisation including extraction — strictly worse.)
-    batch = prepare_batch(events, registry)
+    batch = prepare_batch(scanned, registry)
     manifest, touched = compute_manifest(
         batch, n_buckets=snap.n_buckets, runs=run_manifests
     )
+    if dead_letter and (
+        dead.get["n"]
+        if manifest
+        # no valid rows: Spark may have proven the input empty and run no
+        # job, which reports no metric — ask directly (rare)
+        else not registry.dead_letter(events).isEmpty()
+    ):
+        # quarantine before the skip check and the commit (overwrite by
+        # epoch: replay-safe)
+        write_dead_letters(table, events, epoch, registry)
     content_key = content_epoch_key(manifest)
     epoch_ids = [content_key] if content_keyed else [epoch_id, content_key]
     # Watermark-based skip (for replays older than the recent-epoch window)
@@ -452,14 +453,14 @@ def apply_batch(
     epoch_num = int(epoch) if str(epoch).lstrip("-").isdigit() else -1
     for m in manifest:
         m["epoch"] = epoch_num
-    payload = batch.drop("source_partition", "source_offset")
     # Right-size the write: the manifest just counted the batch, so shrink
     # a small micro-batch to ~ROWS_PER_WRITE_TASK rows per task (coalesce
-    # — no shuffle; the projection+extraction run inside the merged tasks).
+    # — no shuffle; the projection+extraction run inside the merged tasks;
+    # it never adds partitions, so a large batch keeps its own).
     total_rows = sum(m["row_count"] for m in manifest)
-    target = max(1, -(-total_rows // ROWS_PER_WRITE_TASK))
-    if target < payload.rdd.getNumPartitions():
-        payload = payload.coalesce(target)
+    payload = batch.drop("source_partition", "source_offset").coalesce(
+        max(1, -(-total_rows // ROWS_PER_WRITE_TASK))
+    )
     if mode == "mor":
         return delta_merge_into(
             table,
@@ -505,7 +506,7 @@ def prepare_patch_batch(events: DataFrame) -> DataFrame:
         F.col("op") == "delete", F.lit(None).cast("string")
     ).otherwise(
         F.when(is_patch, F.col("lang")).otherwise(
-            F.coalesce(F.col("lang"), lang_id(text))
+            F.coalesce(F.col("lang"), lang_id("text"))
         )
     )
     # html implies the derived text cell; provenance cells always
@@ -519,14 +520,14 @@ def prepare_patch_batch(events: DataFrame) -> DataFrame:
             F.array(F.lit("source_file"), F.lit("source_pos")),
         ),
     )
-    return events.select(
+    return events.withColumn("text", text).select(
         "event_id",
         "op",
         "url",
         "warc_ts",
         sets.alias("_set_cols"),
         "html",
-        text.alias("text"),
+        "text",
         lang.alias("lang"),
         "source_partition",
         "source_offset",
@@ -575,11 +576,10 @@ def apply_patch_batch(
     epoch_num = int(epoch) if str(epoch).lstrip("-").isdigit() else -1
     for m in manifest:
         m["epoch"] = epoch_num
-    payload = batch.drop("source_partition", "source_offset")
     total_rows = sum(m["row_count"] for m in manifest)
-    target = max(1, -(-total_rows // ROWS_PER_WRITE_TASK))
-    if target < payload.rdd.getNumPartitions():
-        payload = payload.coalesce(target)
+    payload = batch.drop("source_partition", "source_offset").coalesce(
+        max(1, -(-total_rows // ROWS_PER_WRITE_TASK))
+    )
     if mode == "mor":
         return delta_merge_patch_into(
             table,

@@ -105,6 +105,10 @@ def main(argv: list[str] | None = None) -> None:
                    help="vacuum: age gate for orphan removal")
     p.add_argument("--cores", default=None)
     args = p.parse_args(argv)
+    if args.mode == "vacuum" and args.branch:
+        # retention from a branch handle would delete main's snapshots;
+        # main's sweep already keeps every branch's files
+        p.error("vacuum runs on main only: drop --branch")
 
     from aus_land_data_etl_spark.session import get_spark
 

@@ -9,7 +9,7 @@ function of the input bytes so every replay produces byte-identical text
 per url.  All UDFs are pandas (Arrow-batched) — never row-at-a-time.
 
 Everything that can stay a Catalyst expression does (token_count,
-quality_score, lang_id are pure ``pyspark.sql.functions`` compositions);
+quality_score, lang_id are pure Catalyst expressions);
 only the HTML extraction and simhash need Python, and both run batch-wise.
 """
 
@@ -78,22 +78,29 @@ _LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def lang_id(text: Column | str) -> Column:
-    """Heuristic language id: argmax of per-language stopword hit counts.
+_TOKENS = r"split(lower(coalesce({col}, '')), r'[^\p{L}]+')"
+_LANG_SCORES = "array(" + ", ".join(
+    f"named_struct('score', size(filter({_TOKENS}, x -> array_contains("
+    f"array({', '.join(map(repr, markers))}), x))), 'lang', '{lang}')"
+    for lang, markers in _LANG_MARKERS.items()
+) + ")"
+#: ``lang_id`` as ONE SQL expression over ``{col}``: a single parse
+#: instead of a Column tree built one py4j round trip per node.
+_LANG_ID_SQL = (
+    f"CASE WHEN array_max({_LANG_SCORES}).score > 0 "
+    f"THEN array_max({_LANG_SCORES}).lang ELSE 'und' END"
+)
 
-    Pure column expressions: tokenize once with ``split``, count marker
-    membership with ``size(array_intersect)``-style filters, take the max
-    via a sorted struct array — no UDF, fully codegen'd.
+
+def lang_id(text: str) -> Column:
+    """Heuristic language id of the column named ``text``: argmax of
+    per-language stopword hit counts.
+
+    Pure column expressions: tokenize with ``split``, count marker
+    membership with ``filter``/``array_contains``, take the max via a
+    struct array (score, then label) — no UDF, fully codegen'd.
     """
-    t = F.col(text) if isinstance(text, str) else text
-    tokens = F.split(F.lower(F.coalesce(t, F.lit(""))), r"[^\p{L}]+")
-    scores = []
-    for lang, markers in _LANG_MARKERS.items():
-        marker_arr = F.array(*[F.lit(m) for m in markers])
-        score = F.size(F.filter(tokens, lambda x: F.array_contains(marker_arr, x)))
-        scores.append(F.struct(score.alias("score"), F.lit(lang).alias("lang")))
-    best = F.array_max(F.array(*scores))
-    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
+    return F.expr(_LANG_ID_SQL.replace("{col}", "`" + text.replace("`", "``") + "`"))
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from aus_land_data_etl_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr
 from aus_land_data_etl_spark.operators.dedup import lww_latest
@@ -33,6 +34,58 @@ from aus_land_data_etl_spark.operators.dedup import lww_latest
 #: Internal columns the merge maintains on the target table.
 DELETED_COL = "is_deleted"
 OP_COL = "op"
+#: SQL over a raw CDC batch: is this row a delete (a NULL ``op`` is not)
+_IS_DELETE = f"coalesce({OP_COL} = 'delete', false)"
+
+
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _tombstoned(
+    batch: DataFrame, fixed: list[str], patch: bool = False
+) -> dict[str, tuple[str, Any]]:
+    """The tombstone projection of a raw CDC batch as name → (SQL, type):
+    ``fixed`` columns as they are, ``op`` consumed into the ``is_deleted``
+    flag, and every payload cell NULL on a delete (so deletes never ship
+    stale data).  ``patch`` adds the determined-cell list: only patches
+    carry one, and a patch arriving with NULL ``_set_cols`` gets the
+    empty set — never a full image, which would null every unnamed cell
+    (matching prepare_patch_batch's streaming guard)."""
+    from aus_land_data_etl_spark.operators.patch import SET_COLS
+
+    types = {f.name: f.dataType for f in batch.schema.fields}
+    cols = {c: (_q(c), types[c]) for c in fixed}
+    cols[DELETED_COL] = (_IS_DELETE, T.BooleanType())
+    if patch:
+        named = "CAST(array() AS array<string>)"
+        if SET_COLS in types:
+            named = f"coalesce({SET_COLS}, {named})"
+        cols[SET_COLS] = (
+            f"CASE WHEN {OP_COL} = 'patch' THEN {named} END",
+            T.ArrayType(T.StringType()),
+        )
+    for c, t in types.items():
+        if c not in cols and c != OP_COL:
+            cols[c] = (f"CASE WHEN {_IS_DELETE} THEN NULL ELSE {_q(c)} END", t)
+    return cols
+
+
+def _select(df: DataFrame, cols: dict[str, tuple[str, Any]], schema=None) -> DataFrame:
+    """ONE select of ``cols`` (name → (SQL, type)) — a SQL select list is
+    one parse, where a Column tree costs a py4j round trip per node.  With
+    ``schema``: onto its column order and types (cast where the type
+    differs, missing → typed NULL)."""
+    if schema is None:
+        return df.selectExpr(*[f"{e} AS {_q(c)}" for c, (e, _) in cols.items()])
+    out = []
+    for f in schema.fields:
+        e, t = cols.get(f.name, ("NULL", None))
+        if t != f.dataType:
+            e = f"CAST({e} AS {f.dataType.simpleString()})"
+        out.append(f"{e} AS {_q(f.name)}")
+    return df.selectExpr(*out)
 
 
 def merge_into(
@@ -59,14 +112,12 @@ def merge_into(
         return snap.version  # idempotent replay: already applied
     key, ver = snap.key_col, snap.version_col
 
-    # 1. flag deletes.  LWW is associative, so the batch needs no separate
+    # 1. flag deletes (``_tombstoned``).  LWW is associative, so the batch needs no separate
     # pre-dedupe pass — target ∪ source resolve in ONE aggregation.  The
     # optional two-level salted pre-reduce exists for streams where single
     # keys carry huge duplicate counts (it shrinks the main shuffle at the
     # cost of an extra one); off by default.
-    src = batch.withColumn(
-        DELETED_COL, F.coalesce(F.col(OP_COL) == "delete", F.lit(False))
-    ).drop(OP_COL)
+    src = _select(batch, _tombstoned(batch, [key, ver, tiebreak_col]))
     if n_salts and n_salts > 1:
         src = lww_latest(
             src, key, version_cols=[ver, tiebreak_col],
@@ -87,17 +138,13 @@ def merge_into(
     # then LWW-resolve per key.  Missing columns (either side) become NULL;
     # tombstone rows carry NULL payload so deletes never ship stale data.
     merged_all = current.unionByName(src, allowMissingColumns=True)
-    payload_cols = [
-        c for c in merged_all.columns if c not in (key, ver, tiebreak_col, DELETED_COL)
-    ]
-    merged_all = merged_all.select(
-        key,
-        ver,
-        tiebreak_col,
-        DELETED_COL,
+    fixed = (key, ver, tiebreak_col, DELETED_COL)
+    merged_all = merged_all.selectExpr(
+        *map(_q, fixed),
         *[
-            F.when(F.col(DELETED_COL), F.lit(None)).otherwise(F.col(c)).alias(c)
-            for c in payload_cols
+            f"CASE WHEN {DELETED_COL} THEN NULL ELSE {_q(c)} END AS {_q(c)}"
+            for c in merged_all.columns
+            if c not in fixed
         ],
     )
     # THE one payload shuffle: repartition by key onto n_buckets partitions.
@@ -177,43 +224,7 @@ def merge_patch_into(
         return snap.version
     key, ver = snap.key_col, snap.version_col
 
-    src = batch
-    if SET_COLS not in src.columns:
-        src = src.withColumn(SET_COLS, F.lit(None).cast("array<string>"))
-    src = (
-        src.withColumn(
-            DELETED_COL, F.coalesce(F.col(OP_COL) == "delete", F.lit(False))
-        )
-        # only patches carry a determined-cell set; full images and
-        # deletes determine everything (SET_COLS NULL).  A malformed
-        # patch arriving with NULL _set_cols must NOT become a full
-        # image (it would null every unnamed cell): coalesce to the
-        # empty set, matching prepare_patch_batch's streaming guard.
-        .withColumn(
-            SET_COLS,
-            F.when(
-                F.col(OP_COL) == "patch",
-                F.coalesce(F.col(SET_COLS), F.array().cast("array<string>")),
-            ),
-        )
-        .drop(OP_COL)
-    )
-    payload_cols = [
-        c
-        for c in src.columns
-        if c not in (key, ver, tiebreak_col, DELETED_COL, SET_COLS)
-    ]
-    src = src.select(
-        key,
-        ver,
-        tiebreak_col,
-        DELETED_COL,
-        SET_COLS,
-        *[
-            F.when(F.col(DELETED_COL), F.lit(None)).otherwise(F.col(c)).alias(c)
-            for c in payload_cols
-        ],
-    )
+    src = _select(batch, _tombstoned(batch, [key, ver, tiebreak_col], patch=True))
 
     if touched is None:
         probe = src.select(bucket_expr(key, snap.n_buckets).alias("b")).distinct()
@@ -273,7 +284,7 @@ def _widened(cur, new):
     return cur
 
 
-def _superset_schema(table: LakeTable, batch: DataFrame):
+def _superset_schema(snap, batch_types: dict[str, Any]):
     """Current table schema ∪ batch columns (schema evolution: added
     columns appended as nullable; a same-named numeric column widens to
     the batch's type when the batch's is wider — int→long, float→double —
@@ -282,10 +293,6 @@ def _superset_schema(table: LakeTable, batch: DataFrame):
     schema union: the delta write lands the batch's physical type, and a
     snapshot still declaring the narrow type would make every subsequent
     read fail with PARQUET_COLUMN_DATA_TYPE_MISMATCH."""
-    from pyspark.sql import types as T
-
-    snap = table.snapshot()
-    batch_types = {f.name: f.dataType for f in batch.schema.fields}
     fields = []
     for f in snap.schema.fields:
         bt = batch_types.get(f.name)
@@ -294,10 +301,43 @@ def _superset_schema(table: LakeTable, batch: DataFrame):
         else:
             fields.append(T.StructField(f.name, _widened(f.dataType, bt), True))
     existing = {f.name for f in snap.schema.fields}
-    for f in batch.schema.fields:
-        if f.name not in existing:
-            fields.append(T.StructField(f.name, f.dataType, True))
+    for name, bt in batch_types.items():
+        if name not in existing:
+            fields.append(T.StructField(name, bt, True))
     return T.StructType(fields)
+
+
+def _delta_append(
+    table: LakeTable,
+    snap,
+    batch: DataFrame,
+    cols: dict[str, tuple[str, Any]],
+    reduce,
+    tiebreak_col: str,
+    compact_depth: int,
+    fanout: bool,
+    **commit: Any,
+) -> int:
+    """Append the tombstone projection ``cols`` of ``batch`` as delta
+    files, aligned to the superset schema in the same select (a narrower
+    batch column upcasts into a widened table type, so the written file
+    always matches the snapshot schema); fold when the stack reaches
+    ``compact_depth``.  Without ``fanout`` the batch is first pre-reduced
+    with ``reduce`` and bucket-clustered."""
+    key = snap.key_col
+    if not fanout:
+        batch = reduce(_select(batch, cols).repartition(snap.n_buckets, F.col(key)))
+        cols = {f.name: (_q(f.name), f.dataType) for f in batch.schema.fields}
+    schema = _superset_schema(snap, {c: t for c, (_, t) in cols.items()})
+    aligned = _select(batch, cols, schema)
+    if not fanout:
+        aligned = aligned.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
+    v = table.commit_delta(
+        aligned, schema=schema, pre_bucketed=True, fanout=fanout, **commit
+    )
+    if table.max_delta_depth() >= compact_depth:
+        v = fold_deltas(table, tiebreak_col, min_stack=compact_depth)
+    return v
 
 
 def delta_merge_into(
@@ -322,57 +362,24 @@ def delta_merge_into(
     commits the table is folded (the amortised rewrite the reference's
     REINDEX step performs in bulk).
     """
-    from aus_land_data_etl_spark.operators.dedup import lww_latest
-
     snap = table.snapshot()
     _reject_patch_table(snap, "delta_merge_into")
     if snap.is_applied(epoch_id, manifest_rows if wal_offsets else None):
         return snap.version
     key, ver = snap.key_col, snap.version_col
-    src = batch.withColumn(
-        DELETED_COL, F.coalesce(F.col(OP_COL) == "delete", F.lit(False))
-    ).drop(OP_COL)
-    payload_cols = [
-        c for c in src.columns if c not in (key, ver, tiebreak_col, DELETED_COL)
-    ]
-    src = src.select(
-        key,
-        ver,
+    return _delta_append(
+        table,
+        snap,
+        batch,
+        _tombstoned(batch, [key, ver, tiebreak_col]),
+        lambda df: lww_latest(df, key, version_cols=[ver, tiebreak_col]),
         tiebreak_col,
-        DELETED_COL,
-        *[
-            F.when(F.col(DELETED_COL), F.lit(None)).otherwise(F.col(c)).alias(c)
-            for c in payload_cols
-        ],
-    )
-    if not fanout:
-        src = src.repartition(snap.n_buckets, F.col(key))
-        src = lww_latest(src, key, version_cols=[ver, tiebreak_col])
-    schema = _superset_schema(table, src)
-    # align column order/set with the superset schema (missing → NULL)
-    aligned = src.select(
-        *[
-            # cast: a narrower batch column upcasts into a widened table
-            # type so the written file always matches the snapshot schema
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in src.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ],
-        *([] if fanout else [bucket_expr(key, snap.n_buckets).alias(BUCKET_COL)]),
-    )
-    v = table.commit_delta(
-        aligned,
-        schema=schema,
+        compact_depth,
+        fanout,
         manifest_rows=manifest_rows,
         epoch_id=epoch_id,
-        pre_bucketed=True,
-        fanout=fanout,
         wal_offsets=wal_offsets,
     )
-    if table.max_delta_depth() >= compact_depth:
-        v = fold_deltas(table, tiebreak_col, min_stack=compact_depth)
-    return v
 
 
 def delta_merge_patch_into(
@@ -397,77 +404,25 @@ def delta_merge_patch_into(
     (operators/patch.py).  With ``fanout`` the write needs no shuffle;
     otherwise the batch is cell-pre-reduced and bucket-clustered first.
     """
-    from aus_land_data_etl_spark.operators.patch import (
-        CELL_VERS,
-        SET_COLS,
-        resolve_cells,
-    )
+    from aus_land_data_etl_spark.operators.patch import resolve_cells
 
     snap = table.snapshot()
     if snap.is_applied(epoch_id, manifest_rows if wal_offsets else None):
         return snap.version
     key, ver = snap.key_col, snap.version_col
-    src = batch
-    if SET_COLS not in src.columns:
-        src = src.withColumn(SET_COLS, F.lit(None).cast("array<string>"))
-    src = (
-        src.withColumn(
-            DELETED_COL, F.coalesce(F.col(OP_COL) == "delete", F.lit(False))
-        )
-        # NULL _set_cols on a patch coalesces to the empty set — never a
-        # full image (see merge_patch_into / prepare_patch_batch)
-        .withColumn(
-            SET_COLS,
-            F.when(
-                F.col(OP_COL) == "patch",
-                F.coalesce(F.col(SET_COLS), F.array().cast("array<string>")),
-            ),
-        )
-        .drop(OP_COL)
-    )
-    payload_cols = [
-        c
-        for c in src.columns
-        if c not in (key, ver, tiebreak_col, DELETED_COL, SET_COLS)
-    ]
-    src = src.select(
-        key,
-        ver,
+    return _delta_append(
+        table,
+        snap,
+        batch,
+        _tombstoned(batch, [key, ver, tiebreak_col], patch=True),
+        lambda df: resolve_cells(df, key, ver, tiebreak_col, deleted_col=DELETED_COL),
         tiebreak_col,
-        DELETED_COL,
-        SET_COLS,
-        *[
-            F.when(F.col(DELETED_COL), F.lit(None)).otherwise(F.col(c)).alias(c)
-            for c in payload_cols
-        ],
-    )
-    if not fanout:
-        src = src.repartition(snap.n_buckets, F.col(key))
-        src = resolve_cells(src, key, ver, tiebreak_col, deleted_col=DELETED_COL)
-    schema = _superset_schema(table, src)
-    aligned = src.select(
-        *[
-            # cast: a narrower batch column upcasts into a widened table
-            # type so the written file always matches the snapshot schema
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in src.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ],
-        *([] if fanout else [bucket_expr(key, snap.n_buckets).alias(BUCKET_COL)]),
-    )
-    v = table.commit_delta(
-        aligned,
-        schema=schema,
+        compact_depth,
+        fanout,
         manifest_rows=manifest_rows,
         epoch_id=epoch_id,
-        pre_bucketed=True,
-        fanout=fanout,
         wal_offsets=wal_offsets,
     )
-    if table.max_delta_depth() >= compact_depth:
-        v = fold_deltas(table, tiebreak_col, min_stack=compact_depth)
-    return v
 
 
 def _is_patch_table(snap) -> bool:

@@ -188,7 +188,12 @@ def bucket_expr(key_col: str, n_buckets: int):
     bucket, so aggregations reuse the partitioning (no extra exchange) and
     the bucketed write emits one file per bucket without another shuffle.
     """
-    return F.pmod(F.hash(F.col(key_col)), F.lit(n_buckets)).cast("int")
+    return F.expr(bucket_sql(key_col, n_buckets))
+
+
+def bucket_sql(key_col: str, n_buckets: int) -> str:
+    """:func:`bucket_expr` as SQL text, for SQL select lists."""
+    return f"CAST(pmod(hash(`{key_col}`), {int(n_buckets)}) AS INT)"
 
 
 # --- Driver-side mirror of Spark's Murmur3 (seed 42) --------------------
@@ -1898,13 +1903,26 @@ class LakeTable:
         self._write_snapshot(new_snap)
         return len(files) - 1
 
+    def _require_main(self, what: str) -> None:
+        """Retention sweeps compute reachability from this handle's
+        descriptors (plus every live branch's, from main); from a branch
+        handle main's own snapshots would look unreachable and be
+        deleted, so a branch handle refuses them."""
+        if self.branch_name is not None:
+            raise ValueError(
+                f"{what} runs on the main handle only (this handle is branch "
+                f"{self.branch_name!r}); main's sweep keeps every branch's files"
+            )
+
     def expire_snapshots(self, keep_last: int = 2) -> None:
         """Drop snapshot descriptors and data dirs no current snapshot
         references (the REINDEX/compaction analog; Iceberg expire_snapshots).
 
         Tagged versions (``tag``) are retention roots: they, their
         manifests, and their data files survive regardless of
-        ``keep_last`` until the tag is dropped."""
+        ``keep_last`` until the tag is dropped.  Main handle only (see
+        ``_require_main``)."""
+        self._require_main("expire_snapshots")
         current = self.current_version()
         keep = set(range(max(0, current - keep_last + 1), current + 1))
         keep |= {v for v in self.tags().values() if v <= current}
@@ -1989,8 +2007,10 @@ class LakeTable:
 
         Reclaims at file granularity (a dir that still holds referenced
         or fresh files survives, minus its dead members) and removes
-        data dirs left empty.  Returns removal counts.
+        data dirs left empty.  Returns removal counts.  Main handle only
+        (see ``_require_main``).
         """
+        self._require_main("vacuum_orphans")
         import time as _time
 
         now = _time.time() if now is None else now

@@ -66,13 +66,12 @@ def lww_latest(
     """
     keys = [key] if isinstance(key, str) else list(key)
     payload = [c for c in df.columns if c not in keys]
-    ver = F.struct(*[F.col(c) for c in version_cols])
-    row = F.struct(*[F.col(c) for c in payload])
+    # SQL text: one parse instead of a Column per payload cell
+    struct = lambda cs: "struct(" + ", ".join(f"`{c}`" for c in cs) + ")"  # noqa: E731
+    winner = F.expr(f"max_by({struct(payload)}, {struct(version_cols)}) AS _win")
 
     def reduce_df(d: DataFrame, group: list[str]) -> DataFrame:
-        winner = F.max_by(row, ver).alias("_win")
-        out = d.groupBy(*group).agg(winner)
-        return out.select(*group, *[F.col(f"_win.{c}").alias(c) for c in payload])
+        return d.groupBy(*group).agg(winner).select(*group, "_win.*")
 
     if n_salts and n_salts > 1:
         salt_base = F.col(salt_source) if salt_source else F.monotonically_increasing_id()

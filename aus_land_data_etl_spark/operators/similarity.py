@@ -489,9 +489,17 @@ class IvfIndex:
         return cls(spark, root)
 
     def cells(self) -> DataFrame:
+        """The cell layout.  Files written before generations existed
+        carry no ``gen`` column: their rows are generation 0, so they stay
+        live until a tombstone names them (a NULL gen would fail every
+        liveness filter and ``compact`` would purge the rows)."""
         import os
 
-        return self.spark.read.parquet(os.path.join(self.root, "cells"))
+        d = os.path.join(self.root, "cells")
+        df = self.spark.read.parquet(d)
+        if "gen" not in df.columns:  # the footer read was a legacy file
+            df = self.spark.read.schema(df.schema.add("gen", "long")).parquet(d)
+        return df.withColumn("gen", F.coalesce(F.col("gen"), F.lit(0).cast("long")))
 
     def add(self, vectors: DataFrame, vec_col: str = "embedding") -> None:
         """Incrementally index new vectors WITHOUT retraining: assign each

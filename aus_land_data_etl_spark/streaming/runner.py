@@ -131,7 +131,8 @@ def run_stream(
     expire_snapshots the same way).  ``None`` disables (callers that
     need time travel over the whole run manage expiry themselves).
     Time-travel depth shrinks to ``expire_keep_last`` — changelog
-    consumers must keep up within that many epochs.
+    consumers must keep up within that many epochs.  Skipped on a branch
+    handle (retention runs from main).
 
     ``vacuum_grace_seconds`` — each maintenance tick also runs
     ``vacuum_orphans`` (age-gated removal of files no descriptor
@@ -143,7 +144,8 @@ def run_stream(
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         counters["batches"] += 1
-        # metrics ride the manifest job (ONE envelope scan per batch)
+        # metrics ride apply_batch's first action, its manifest job (ONE
+        # envelope scan per batch, shared with the dead-letter count)
         batch_df, obs_handle = _observe_batch(batch_df)
         # content_keyed: the exactly-once key is the batch's content
         # identity (manifest digest), not the bare Spark batch id — batch
@@ -169,7 +171,10 @@ def run_stream(
         counters["rows"] += int(obs["n_events"])
         for v in views or []:
             v.refresh()
-        if expire_every and counters["batches"] % expire_every == 0:
+        # never on a branch handle: retention runs from main, whose sweep
+        # keeps every branch's files
+        main = table.branch_name is None
+        if expire_every and main and counters["batches"] % expire_every == 0:
             table.expire_snapshots(keep_last=expire_keep_last)
             if vacuum_grace_seconds is not None:
                 # failure debris (dead OCC losers, crash leftovers) ages
@@ -242,7 +247,10 @@ def run_patch_stream(
         obs = _drain_observation(obs_handle, epoch_id)
         metrics.append(obs)
         counters["rows"] += int(obs["n_events"])
-        if expire_every and counters["batches"] % expire_every == 0:
+        # never on a branch handle: retention runs from main, whose sweep
+        # keeps every branch's files
+        main = table.branch_name is None
+        if expire_every and main and counters["batches"] % expire_every == 0:
             table.expire_snapshots(keep_last=expire_keep_last)
             if vacuum_grace_seconds is not None:
                 table.vacuum_orphans(grace_seconds=vacuum_grace_seconds)

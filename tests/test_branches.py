@@ -153,6 +153,34 @@ def test_branch_validation_and_guards(spark, staged):
     t.drop_branch("a")
 
 
+def test_retention_refuses_branch_handle(spark, staged):
+    """Retention computed from a branch handle sees only that branch's
+    descriptors, so it used to delete main's snapshot descriptors and
+    data dirs.  Both sweeps and the CLI's ``vacuum --branch`` now refuse,
+    and main stays readable at its version."""
+    from aus_land_data_etl_spark import cli
+
+    t, batches = staged
+    apply_batch(t, batches[1], epoch=1)
+    br = t.create_branch("wap")
+    apply_batch(br, batches[2], epoch=2)
+    main_v, main_state = t.current_version(), _state(t)
+    on_disk = sorted(os.listdir(t.root))
+
+    with pytest.raises(ValueError, match="branch"):
+        br.expire_snapshots(keep_last=1)
+    with pytest.raises(ValueError, match="branch"):
+        br.vacuum_orphans(grace_seconds=0.0)
+    with pytest.raises(SystemExit):
+        cli.main(["vacuum", "--table", t.root, "--branch", "wap",
+                  "--keep-last", "1", "--grace-hours", "0"])
+    assert sorted(os.listdir(t.root)) == on_disk
+    assert t.current_version() == main_v
+    assert _state(t) == main_state
+    for v in range(1, main_v + 1):
+        t.snapshot(v)  # every main descriptor survived
+
+
 def test_subscription_sees_publish_as_one_net_interval(
     spark, staged, tmp_table_dir
 ):

@@ -178,7 +178,7 @@ def test_tombstone_blocks_late_update(spark, tmp_table_dir):
     assert len(cur) == 1 and cur[0]["text"] == "new"
 
 
-def test_unknown_schema_version_dead_letters(spark, events, tmp_table_dir):
+def test_unknown_schema_version_dead_letters(spark, events, tmp_table_dir, tmp_path):
     """Events with an unregistered schema_version are routed to the
     dead-letter output and excluded from the apply — never guessed at
     (registry contract; the reference's typed-reader error path,
@@ -199,13 +199,34 @@ def test_unknown_schema_version_dead_letters(spark, events, tmp_table_dir):
         0
     ] == 99
 
+    import os
+
+    from aus_land_data_etl_spark.cdc.apply import read_dead_letters
+
+    cols = ["url", "warc_ts", "event_id", "text", "lang", "fetch_status"]
+    exp = state_fingerprint(expected_final(reg.valid(future)))
+    # a clean batch quarantines nothing: not even the directory appears
     table = create_pages_table(spark, tmp_table_dir, n_buckets=8)
     apply_batch(table, reg.valid(future), epoch=0, registry=reg)
+    assert not os.path.exists(os.path.join(tmp_table_dir, "_dead_letter"))
     # converged state contains only keys whose winning event was valid
-    exp = expected_final(reg.valid(future))
-    assert state_fingerprint(read_current(table).select(
-        "url", "warc_ts", "event_id", "text", "lang", "fetch_status"
-    )) == state_fingerprint(exp)
+    assert state_fingerprint(read_current(table).select(*cols)) == exp
+
+    # a mixed batch quarantines exactly its unknown-version rows, whole,
+    # and applies the rest
+    mixed = create_pages_table(spark, str(tmp_path / "mixed"), n_buckets=8)
+    apply_batch(mixed, future, epoch=0, registry=reg)
+    envelope = lambda df: sorted(map(tuple, df.select(  # noqa: E731
+        "event_id", "schema_version", F.sha2("html", 256)).collect()))
+    assert envelope(read_dead_letters(mixed)) == envelope(reg.dead_letter(future))
+    assert state_fingerprint(read_current(mixed).select(*cols)) == exp
+    # an all-dead batch (no manifest rows) still quarantines; an empty one
+    # (no Spark job at all) writes nothing
+    apply_batch(mixed, reg.dead_letter(future), epoch=1, registry=reg)
+    apply_batch(mixed, future.limit(0), epoch=2, registry=reg)
+    assert sorted(os.listdir(os.path.join(str(tmp_path / "mixed"), "_dead_letter"))) == [
+        "e0", "e1"]
+    assert read_dead_letters(mixed).count() == 2 * reg.dead_letter(future).count()
 
 
 def test_extreme_hot_domain_convergence(spark, tmp_table_dir):

@@ -527,3 +527,49 @@ def test_ivf_index_remove_revive_and_purge(spark, tmp_path):
     idx.compact()
     assert not os.path.isdir(os.path.join(root, "removed"))
     assert got() == exact(live)
+
+
+def test_ivf_index_legacy_genless_cells_stay_live(spark, tmp_path):
+    """An index written before generations existed has cells files with
+    no ``gen`` column and no gen.txt.  After the upgrade, ``add`` and
+    ``remove`` stamp generations; the pre-upgrade vectors count as
+    generation 0, so they stay searchable and survive ``compact``
+    (they used to read as NULL and fail every liveness filter)."""
+    import os
+    import shutil
+
+    from aus_land_data_etl_spark.operators.similarity import (
+        IvfIndex,
+        cosine_topk_bruteforce,
+    )
+
+    df = _clustered_vectors(spark)
+    old = df.filter(F.pmod("vec_id", F.lit(2)) == 0)
+    new = df.filter(F.pmod("vec_id", F.lit(2)) == 1)
+    q = df.filter(F.col("vec_id") < 6)
+    cols = ["query_id", "neighbour_id", "rank", "cosine_sim"]
+    root = str(tmp_path / "ivf_legacy")
+    IvfIndex.build(old, root, n_cells=6, seed=42)
+    # rewrite the build as the legacy layout: no gen column, no gen.txt
+    cells = os.path.join(root, "cells")
+    legacy = spark.read.parquet(cells).drop("gen").localCheckpoint(eager=True)
+    shutil.rmtree(cells)
+    legacy.write.partitionBy("cell").parquet(cells)
+    os.remove(os.path.join(root, "gen.txt"))
+
+    idx = IvfIndex(spark, root)
+    idx.add(new)
+    victim = new.select("vec_id").orderBy("vec_id").first()[0]
+    idx.remove([victim])
+    live = df.filter(F.col("vec_id") != victim)
+
+    def got():
+        return sorted(map(tuple, idx.search(q, k=3, nprobe=6).select(*cols).collect()))
+
+    want = sorted(
+        map(tuple, cosine_topk_bruteforce(live, q, k=3).select(*cols).collect())
+    )
+    assert got() == want
+    idx.compact()
+    assert idx.cells().count() == live.count()
+    assert got() == want

@@ -205,32 +205,52 @@ def test_long_run_bounds_snapshot_dirs_on_disk(spark, dirs):
     assert _fingerprint(got) == _expected(events)
 
 
-def test_metrics_ride_manifest_job_single_scan(spark):
+def _group_jobs(sc, group: str) -> int:
+    """Jobs launched under ``group`` so far (the status store is fed by
+    the listener bus, so drain it first)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_metrics_ride_manifest_job_single_scan(spark, tmp_path):
     """Round-3 verdict #4: per-batch telemetry must NOT be a second
-    envelope scan.  Evidence: compute_manifest over an observed frame is
-    the ONLY action — reading the observation afterwards launches zero
-    additional Spark jobs, and the metric values equal a directly
-    aggregated reference."""
-    from aus_land_data_etl_spark.cdc.apply import compute_manifest
+    envelope scan — and neither may the dead-letter count.  Pins
+    ``apply_batch``'s exact Spark job count over a parquet WAL batch:
+    the manifest (2 jobs: its one exchange, then the aggregation) plus
+    the write (1 job MoR; CoW adds its LWW shuffle).  The count is the
+    same with and without the runner's ``observe()`` metrics on the
+    input, reading the observation afterwards launches zero additional
+    jobs, and the metric values equal a directly aggregated
+    reference."""
+    from aus_land_data_etl_spark.cdc.apply import apply_batch
+    from aus_land_data_etl_spark.cdc.events import EVENT_SCHEMA
     from aus_land_data_etl_spark.streaming.runner import (
         _batch_observations,
         _observe_batch,
     )
 
-    events = generate_events(spark, 1500, seed=31).localCheckpoint(eager=True)
-    observed, handle = _observe_batch(events)
-    sc = spark.sparkContext
-    group = "obs-single-scan"
-    sc.setJobGroup(group, "metrics piggyback evidence")
-    try:
-        manifest, _ = compute_manifest(prepare_batch(observed), n_buckets=8)
-        jobs_after_manifest = len(sc.statusTracker().getJobIdsForGroup(group))
-        got = dict(handle.get)  # must already be populated
-        jobs_after_get = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setJobGroup("", "")
-    assert manifest  # the manifest job really ran
-    assert jobs_after_manifest >= 1
-    assert jobs_after_get == jobs_after_manifest  # obs.get launched NO job
+    wal = str(tmp_path / "wal")
+    generate_events(spark, 1500, seed=31).write.parquet(wal)
+    events = spark.read.schema(EVENT_SCHEMA).parquet(wal)
     want = events.agg(*_batch_observations()).collect()[0].asDict()
-    assert got == want
+    sc = spark.sparkContext
+    for mode, want_jobs in (("mor", 3), ("cow", 4)):
+        for observed in (False, True):
+            table = create_pages_table(
+                spark, str(tmp_path / f"t-{mode}-{observed}"), n_buckets=8
+            )
+            batch = events
+            if observed:
+                batch, handle = _observe_batch(events)
+            group = f"apply-jobs-{mode}-{observed}"
+            sc.setJobGroup(group, "apply_batch job count")
+            try:
+                apply_batch(table, batch, epoch=0, mode=mode)
+                jobs_after_apply = _group_jobs(sc, group)
+                got = dict(handle.get) if observed else want
+                jobs_after_get = _group_jobs(sc, group)
+            finally:
+                sc.setJobGroup("", "")
+            assert jobs_after_apply == want_jobs, (mode, observed, jobs_after_apply)
+            assert jobs_after_get == jobs_after_apply  # obs.get launched NO job
+            assert got == want
