@@ -12,8 +12,9 @@ reference ETL pipeline (AKST/Aus-Land-Data-ETL), re-expressed Spark-first:
                    branches (Iceberg-style semantics; swap in real
                    Iceberg on a cluster with the jars present).
 - ``cdc``        — change-event model, deterministic synthetic generator,
-                   schema-version registry, two-level salted LWW dedupe and
-                   the idempotent merge-apply pipeline.
+                   schema-version registry, aggregate LWW dedupe (per row,
+                   or per cell for partial images) and the idempotent
+                   merge-apply pipeline.
 - ``streaming``  — Structured Streaming shell (file source → foreachBatch)
                    with exactly-once epoch guard, observe() metrics, and
                    event-time operators (watermarked windows, bounded

@@ -32,14 +32,6 @@ from aus_land_data_etl_spark.lake.table import LakeTable
 #: ever shrinks partitioning, so large batches are untouched).
 ROWS_PER_WRITE_TASK = 4_000
 
-#: Salt count for the two-level hot-key LWW pre-reduce.  0 disables (the
-#: default): LWW is associative, so the merge resolves target ∪ source in
-#: one aggregation, and an extra pre-shuffle only pays off when individual
-#: keys carry huge duplicate-event counts within a batch.  Hot *domains*
-#: (north rule) don't skew the per-url grouping; a genuinely hot *url*
-#: does, and then n_salts>1 bounds the reduce-side key width.
-DEFAULT_SALTS = 0
-
 
 def write_dead_letters(
     table: LakeTable, events: DataFrame, epoch: int | str,
@@ -86,7 +78,6 @@ def read_dead_letters(table: LakeTable) -> DataFrame:
 def replay_dead_letters(
     table: LakeTable,
     registry: SchemaRegistry | None = None,
-    n_salts: int = DEFAULT_SALTS,
     mode: str = "mor",
 ) -> dict[str, int]:
     """Re-inject quarantined events once the registry has learned their
@@ -146,7 +137,6 @@ def replay_dead_letters(
             ready,
             epoch=f"dlq-{sub[1:]}",
             registry=registry,
-            n_salts=n_salts,
             mode=mode,
             content_keyed=True,
             dead_letter=False,  # ready rows are known-projectable
@@ -379,7 +369,6 @@ def apply_batch(
     events: DataFrame,
     epoch: int | str,
     registry: SchemaRegistry | None = None,
-    n_salts: int = DEFAULT_SALTS,
     mode: str = "mor",
     compact_depth: int = 8,
     content_keyed: bool = False,
@@ -388,6 +377,12 @@ def apply_batch(
     run_manifests: bool = False,
 ) -> int:
     """Apply one micro-batch of raw change events exactly once.
+
+    ``events`` are ``EVENT_SCHEMA`` rows (full images) or
+    ``PATCH_EVENT_SCHEMA`` rows (partial images, told apart by their
+    ``set_cols`` column): the latter resolve per cell
+    (operators/patch.py), so an update that flips one column on a
+    multi-MB page appends bytes proportional to the patch.
 
     ``mode='mor'`` (default): merge-on-read — O(batch) per epoch, deltas
     folded when any bucket's stack reaches ``compact_depth`` (the scale
@@ -405,35 +400,41 @@ def apply_batch(
     watermarks (see ``lake.table``); either way a replayed batch skips the
     expensive extraction + write entirely.
 
-    ``dead_letter`` (default on): events whose ``schema_version`` the
-    registry does not know are quarantined raw under
-    ``<root>/_dead_letter/`` (``write_dead_letters``) instead of being
-    silently dropped by the valid-only projection; ``read_dead_letters``
-    surfaces them for replay once the registry learns the version.
+    ``dead_letter`` (default on, full images only): events whose
+    ``schema_version`` the registry does not know are quarantined raw
+    under ``<root>/_dead_letter/`` (``write_dead_letters``) instead of
+    being silently dropped by the valid-only projection;
+    ``read_dead_letters`` surfaces them for replay once the registry
+    learns the version.
     """
     from aus_land_data_etl_spark.lake.merge import delta_merge_into
 
     epoch_id = str(epoch)
-    registry = registry or SchemaRegistry()
     snap = table.snapshot()
     if not content_keyed and snap.is_applied(epoch_id):
         return snap.version  # replayed batch: no-op (exactly-once)
-    scanned = events
-    if dead_letter:
-        # count unknown-schema events BEFORE the valid-only projection
-        # drops them, as a metric of the manifest job (no job of its own)
-        dead = Observation()
-        scanned = events.observe(dead, F.count_if(registry.unknown()).alias("n"))
+    dead = None
+    if "set_cols" in events.columns:
+        # partial images carry no schema_version: no registry, no dead letters
+        batch = prepare_patch_batch(events)
+    else:
+        registry = registry or SchemaRegistry()
+        scanned = events
+        if dead_letter:
+            # count unknown-schema events BEFORE the valid-only projection
+            # drops them, as a metric of the manifest job (no job of its own)
+            dead = Observation()
+            scanned = events.observe(dead, F.count_if(registry.unknown()).alias("n"))
+        batch = prepare_batch(scanned, registry)
     # No persist: the manifest aggregation reads only envelope columns, so
     # Catalyst's column pruning drops the (deterministic) extraction UDF
     # from that job entirely — the expensive html→text pass runs exactly
     # once, inside the merge write.  (Persisting here would force a full
     # materialisation including extraction — strictly worse.)
-    batch = prepare_batch(scanned, registry)
     manifest, touched = compute_manifest(
         batch, n_buckets=snap.n_buckets, runs=run_manifests
     )
-    if dead_letter and (
+    if dead is not None and (
         dead.get["n"]
         if manifest
         # no valid rows: Spark may have proven the input empty and run no
@@ -461,6 +462,7 @@ def apply_batch(
     payload = batch.drop("source_partition", "source_offset").coalesce(
         max(1, -(-total_rows // ROWS_PER_WRITE_TASK))
     )
+    # the merge resolves per cell when the payload carries _set_cols
     if mode == "mor":
         return delta_merge_into(
             table,
@@ -477,7 +479,6 @@ def apply_batch(
         tiebreak_col="event_id",
         epoch_id=epoch_ids,
         manifest_rows=manifest,
-        n_salts=n_salts,
         touched=touched,
         wal_offsets=wal_offsets,
     )
@@ -533,69 +534,4 @@ def prepare_patch_batch(events: DataFrame) -> DataFrame:
         "source_offset",
         "source_file",
         "source_pos",
-    )
-
-
-def apply_patch_batch(
-    table: LakeTable,
-    events: DataFrame,
-    epoch: int | str,
-    mode: str = "mor",
-    compact_depth: int = 8,
-    content_keyed: bool = False,
-    wal_offsets: bool = False,
-    run_manifests: bool = False,
-) -> int:
-    """Apply one micro-batch of partial-image change events exactly once.
-
-    The patch counterpart of :func:`apply_batch`: same lineage manifests
-    (offset ranges, row counts, order-insensitive checksums per source
-    partition), same content-addressed exactly-once keys and offset
-    watermarks, same MoR (O(batch) fanout deltas) / CoW (bucket-pruned
-    rewrite) modes — but rows resolve per-cell (operators/patch.py), so
-    an update that flips one column on a multi-MB page appends bytes
-    proportional to the patch.
-    """
-    from aus_land_data_etl_spark.lake.merge import (
-        delta_merge_patch_into,
-        merge_patch_into,
-    )
-
-    epoch_id = str(epoch)
-    snap = table.snapshot()
-    if not content_keyed and snap.is_applied(epoch_id):
-        return snap.version
-    batch = prepare_patch_batch(events)
-    manifest, touched = compute_manifest(
-        batch, n_buckets=snap.n_buckets, runs=run_manifests
-    )
-    content_key = content_epoch_key(manifest)
-    epoch_ids = [content_key] if content_keyed else [epoch_id, content_key]
-    if snap.is_applied(epoch_ids, manifest if wal_offsets else None):
-        return snap.version
-    epoch_num = int(epoch) if str(epoch).lstrip("-").isdigit() else -1
-    for m in manifest:
-        m["epoch"] = epoch_num
-    total_rows = sum(m["row_count"] for m in manifest)
-    payload = batch.drop("source_partition", "source_offset").coalesce(
-        max(1, -(-total_rows // ROWS_PER_WRITE_TASK))
-    )
-    if mode == "mor":
-        return delta_merge_patch_into(
-            table,
-            payload,
-            tiebreak_col="event_id",
-            epoch_id=epoch_ids,
-            manifest_rows=manifest,
-            compact_depth=compact_depth,
-            wal_offsets=wal_offsets,
-        )
-    return merge_patch_into(
-        table,
-        payload,
-        tiebreak_col="event_id",
-        epoch_id=epoch_ids,
-        manifest_rows=manifest,
-        touched=touched,
-        wal_offsets=wal_offsets,
     )

@@ -69,7 +69,6 @@ def main(argv: list[str] | None = None) -> None:
                         " (a later WAL segment must not reuse offsets)")
     p.add_argument("--n-buckets", type=int, default=32)
     p.add_argument("--max-files-per-trigger", type=int, default=4)
-    p.add_argument("--n-salts", type=int, default=0)
     p.add_argument("--zorder-cols", help="comma-separated z-order dimensions")
     p.add_argument("--files-per-bucket", type=int, default=4)
     p.add_argument("--zorder-bits", type=int, default=6)
@@ -147,7 +146,6 @@ def main(argv: list[str] | None = None) -> None:
             args.wal,
             args.checkpoint,
             max_files_per_trigger=args.max_files_per_trigger,
-            n_salts=args.n_salts,
         )
         print(
             json.dumps(

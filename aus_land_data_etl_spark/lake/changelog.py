@@ -258,7 +258,7 @@ def read_changes(
     before image deliberately carries the version of the row it removed.
     """
     from aus_land_data_etl_spark.lake.merge import DELETED_COL, OP_COL
-    from aus_land_data_etl_spark.operators.patch import CELL_VERS, SET_COLS
+    from aus_land_data_etl_spark.operators.patch import CELL_VERS, SET_COLS, per_cell
 
     # tag names resolve to their versions (diff between two tags:
     # read_changes(t, "pre-migration", "post-migration"))
@@ -294,10 +294,7 @@ def read_changes(
 
     in_a = F.coalesce(F.col("_in_a"), F.lit(False))
     in_b = F.coalesce(F.col("_in_b"), F.lit(False))
-    is_patch_table = any(
-        f.name in (CELL_VERS, SET_COLS) for f in snap_to.schema.fields
-    )
-    if is_patch_table:
+    if per_cell(snap_to.schema.names):
         # Per-cell tables: the row version pair is NOT a change witness —
         # an out-of-order patch older than the row winner but newer than
         # one cell's last-determined version changes that cell's resolved

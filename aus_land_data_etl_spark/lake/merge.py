@@ -5,9 +5,9 @@ The Spark-first restatement of the reference's apply-changes path
 ``change_type`` metadata — /root/reference/sql/nsw_spatial/tasks/
 dedup_lot_layer.sql:16-35, sql/nsw_spatial/schema/002_APPLY_staging.sql:14-21):
 
-1. LWW-dedupe the incoming batch per key (two-level salted aggregate —
-   operators.dedup.lww_latest) so each key contributes exactly one
-   candidate row.
+1. Flag deletes and union the batch with the touched buckets, so each
+   key resolves in ONE aggregation (operators.dedup.lww_latest per row,
+   operators.patch.resolve_cells per cell for partial images).
 2. Bucket-prune: only buckets whose keys appear in the batch are read and
    rewritten (bounded write amplification; Iceberg ``MERGE INTO`` with
    bucket partitioning does the same on a real cluster).
@@ -30,6 +30,13 @@ from pyspark.sql import types as T
 
 from aus_land_data_etl_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr
 from aus_land_data_etl_spark.operators.dedup import lww_latest
+from aus_land_data_etl_spark.operators.patch import (
+    CELL_VERS,
+    SET_COLS,
+    per_cell,
+    resolve,
+    resolve_cells,
+)
 
 #: Internal columns the merge maintains on the target table.
 DELETED_COL = "is_deleted"
@@ -53,8 +60,6 @@ def _tombstoned(
     carry one, and a patch arriving with NULL ``_set_cols`` gets the
     empty set — never a full image, which would null every unnamed cell
     (matching prepare_patch_batch's streaming guard)."""
-    from aus_land_data_etl_spark.operators.patch import SET_COLS
-
     types = {f.name: f.dataType for f in batch.schema.fields}
     cols = {c: (_q(c), types[c]) for c in fixed}
     cols[DELETED_COL] = (_IS_DELETE, T.BooleanType())
@@ -94,35 +99,30 @@ def merge_into(
     tiebreak_col: str,
     epoch_id: str | list[str] | None = None,
     manifest_rows: list[dict[str, Any]] | None = None,
-    n_salts: int = 0,
     touched: list[int] | None = None,
     wal_offsets: bool = False,
     properties_update: dict[str, Any] | None = None,
 ) -> int:
-    """Apply a CDC batch (op ∈ insert/update/delete) to the table.
+    """Apply a CDC batch (op ∈ insert/update/delete, and ``patch`` for
+    partial images) to the table, copy-on-write.
 
     ``batch`` must carry the table's key and version columns, ``op``, the
     tiebreak column, and any payload columns.  Payload columns absent from
     the current table schema trigger schema evolution (added as nullable).
-    Returns the committed snapshot version.
+    Rows resolve per cell (operators/patch.py) when the batch names its
+    cells in ``_set_cols`` or the table is already cell-versioned, per row
+    otherwise.  Returns the committed snapshot version.
     """
     snap = table.snapshot()
-    _reject_patch_table(snap, "merge_into")
     if snap.is_applied(epoch_id, manifest_rows if wal_offsets else None):
         return snap.version  # idempotent replay: already applied
     key, ver = snap.key_col, snap.version_col
+    cells = per_cell(batch.columns, snap.schema.names)
 
-    # 1. flag deletes (``_tombstoned``).  LWW is associative, so the batch needs no separate
-    # pre-dedupe pass — target ∪ source resolve in ONE aggregation.  The
-    # optional two-level salted pre-reduce exists for streams where single
-    # keys carry huge duplicate counts (it shrinks the main shuffle at the
-    # cost of an extra one); off by default.
-    src = _select(batch, _tombstoned(batch, [key, ver, tiebreak_col]))
-    if n_salts and n_salts > 1:
-        src = lww_latest(
-            src, key, version_cols=[ver, tiebreak_col],
-            n_salts=n_salts, salt_source=tiebreak_col,
-        )
+    # 1. flag deletes (``_tombstoned``).  LWW is associative, so the batch
+    # needs no separate pre-dedupe pass — target ∪ source resolve in ONE
+    # aggregation.
+    src = _select(batch, _tombstoned(batch, [key, ver, tiebreak_col], patch=cells))
 
     # 2. bucket pruning — only buckets containing batch keys are read and
     # rewritten.  The caller usually supplies ``touched`` piggybacked on
@@ -138,22 +138,33 @@ def merge_into(
     # then LWW-resolve per key.  Missing columns (either side) become NULL;
     # tombstone rows carry NULL payload so deletes never ship stale data.
     merged_all = current.unionByName(src, allowMissingColumns=True)
-    fixed = (key, ver, tiebreak_col, DELETED_COL)
-    merged_all = merged_all.selectExpr(
-        *map(_q, fixed),
-        *[
-            f"CASE WHEN {DELETED_COL} THEN NULL ELSE {_q(c)} END AS {_q(c)}"
-            for c in merged_all.columns
-            if c not in fixed
-        ],
-    )
+    if not cells:
+        fixed = (key, ver, tiebreak_col, DELETED_COL)
+        merged_all = merged_all.selectExpr(
+            *map(_q, fixed),
+            *[
+                f"CASE WHEN {DELETED_COL} THEN NULL ELSE {_q(c)} END AS {_q(c)}"
+                for c in merged_all.columns
+                if c not in fixed
+            ],
+        )
     # THE one payload shuffle: repartition by key onto n_buckets partitions.
     # bucket_expr is Spark's own hash-partitioning function, so (a) the LWW
     # groupBy below reuses this partitioning (no second exchange — check
     # .explain()), and (b) partition i holds exactly bucket i, so the
     # bucketed write needs no further shuffle either.
     merged_all = merged_all.repartition(snap.n_buckets, F.col(key))
-    resolved = lww_latest(merged_all, key, version_cols=[ver, tiebreak_col])
+    if cells:
+        # resolution consumes _set_cols and materialises _cvers — but a
+        # bucket-scoped commit does NOT retire fanout ("*") delta layers or
+        # untouched buckets' stacks, and those files are re-read under the
+        # COMMITTED schema.  Dropping _set_cols from it would make surviving
+        # patch deltas replay as full images, nulling every cell they never
+        # determined; so align to the pre-merge schema as fold_deltas does.
+        resolved = resolve_cells(merged_all, key, ver, tiebreak_col)
+        resolved = _align_to(resolved, snap.schema)
+    else:
+        resolved = lww_latest(merged_all, key, version_cols=[ver, tiebreak_col])
     resolved = resolved.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
 
     # 4. atomic commit of the touched buckets + manifest + epoch guard
@@ -167,98 +178,6 @@ def merge_into(
         pre_bucketed=True,
         wal_offsets=wal_offsets,
         properties_update=properties_update,
-        computed_from=snap,
-    )
-
-
-def _reject_patch_table(snap, caller: str) -> None:
-    """Row-level LWW on a per-cell-versioned table would keep the whole-row
-    winner's stale ``_cvers`` map; patch tables must stay on the
-    cell-resolving path.
-
-    The guard matches :func:`_is_patch_table` (``_set_cols`` OR
-    ``_cvers``): a merge-on-read patch table before its first
-    fold/cluster carries only ``_set_cols`` in its snapshot schema
-    (``_cvers`` is materialised by resolution), and a whole-row LWW
-    merge on such a table would null every cell a winning patch row did
-    not name.  ``seal_patches`` drops BOTH columns, so row merges are
-    re-enabled after sealing.
-    """
-    from aus_land_data_etl_spark.operators.patch import CELL_VERS, SET_COLS
-
-    if _is_patch_table(snap):
-        raise ValueError(
-            f"{caller} cannot run on a table with per-cell semantics "
-            f"({SET_COLS}/{CELL_VERS} column); use merge_patch_into"
-        )
-
-
-def merge_patch_into(
-    table: LakeTable,
-    batch: DataFrame,
-    tiebreak_col: str,
-    epoch_id: str | list[str] | None = None,
-    manifest_rows: list[dict[str, Any]] | None = None,
-    touched: list[int] | None = None,
-    wal_offsets: bool = False,
-) -> int:
-    """Apply a CDC batch containing *partial-image* updates
-    (op ∈ insert/update/delete/**patch**) with per-cell LWW resolution.
-
-    Patch rows name the cells they determine in a ``_set_cols``
-    array<string> column (see operators/patch.py for the full semantics:
-    explicit-NULL assignment, patch-after-delete resurrection, and the
-    persisted ``_cvers`` map that makes the reduction associative and
-    replay-order independent).  Non-patch rows are full images exactly as
-    in :func:`merge_into`.  Copy-on-write: same bucket pruning, same ONE
-    payload shuffle, same atomic epoch-guarded commit.
-    """
-    from aus_land_data_etl_spark.operators.patch import (
-        CELL_VERS,
-        SET_COLS,
-        resolve_cells,
-    )
-
-    snap = table.snapshot()
-    if snap.is_applied(epoch_id, manifest_rows if wal_offsets else None):
-        return snap.version
-    key, ver = snap.key_col, snap.version_col
-
-    src = _select(batch, _tombstoned(batch, [key, ver, tiebreak_col], patch=True))
-
-    if touched is None:
-        probe = src.select(bucket_expr(key, snap.n_buckets).alias("b")).distinct()
-        touched = [r[0] for r in probe.collect()]
-    current = table.read(buckets=touched)
-    if DELETED_COL not in current.columns:
-        current = current.withColumn(DELETED_COL, F.lit(False))
-
-    merged_all = current.unionByName(src, allowMissingColumns=True)
-    merged_all = merged_all.repartition(snap.n_buckets, F.col(key))
-    resolved = resolve_cells(
-        merged_all, key, ver, tiebreak_col, deleted_col=DELETED_COL
-    )
-    # resolution consumed _set_cols and materialised _cvers — but a
-    # bucket-scoped CoW commit does NOT retire fanout ("*") delta layers
-    # or untouched buckets' stacks, and those files are re-read under the
-    # COMMITTED schema (table.read imposes snap.schema).  Committing a
-    # schema without _set_cols would make surviving patch deltas replay
-    # as full images, nulling every cell they never determined (judge
-    # round-4 repro: patch _set_cols=[] ts35 MoR, then update ts33 CoW).
-    # Align to the pre-merge snapshot schema exactly as fold_deltas does.
-    resolved = _align_to(resolved, snap.schema)
-    resolved = resolved.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
-
-    new_schema = resolved.drop(BUCKET_COL).schema
-    assert CELL_VERS in [f.name for f in new_schema.fields]
-    return table.commit_buckets(
-        resolved,
-        touched_buckets=touched,
-        schema=new_schema,
-        manifest_rows=manifest_rows,
-        epoch_id=epoch_id,
-        pre_bucketed=True,
-        wal_offsets=wal_offsets,
         computed_from=snap,
     )
 
@@ -307,39 +226,6 @@ def _superset_schema(snap, batch_types: dict[str, Any]):
     return T.StructType(fields)
 
 
-def _delta_append(
-    table: LakeTable,
-    snap,
-    batch: DataFrame,
-    cols: dict[str, tuple[str, Any]],
-    reduce,
-    tiebreak_col: str,
-    compact_depth: int,
-    fanout: bool,
-    **commit: Any,
-) -> int:
-    """Append the tombstone projection ``cols`` of ``batch`` as delta
-    files, aligned to the superset schema in the same select (a narrower
-    batch column upcasts into a widened table type, so the written file
-    always matches the snapshot schema); fold when the stack reaches
-    ``compact_depth``.  Without ``fanout`` the batch is first pre-reduced
-    with ``reduce`` and bucket-clustered."""
-    key = snap.key_col
-    if not fanout:
-        batch = reduce(_select(batch, cols).repartition(snap.n_buckets, F.col(key)))
-        cols = {f.name: (_q(f.name), f.dataType) for f in batch.schema.fields}
-    schema = _superset_schema(snap, {c: t for c, (_, t) in cols.items()})
-    aligned = _select(batch, cols, schema)
-    if not fanout:
-        aligned = aligned.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
-    v = table.commit_delta(
-        aligned, schema=schema, pre_bucketed=True, fanout=fanout, **commit
-    )
-    if table.max_delta_depth() >= compact_depth:
-        v = fold_deltas(table, tiebreak_col, min_stack=compact_depth)
-    return v
-
-
 def delta_merge_into(
     table: LakeTable,
     batch: DataFrame,
@@ -347,105 +233,43 @@ def delta_merge_into(
     epoch_id: str | list[str] | None = None,
     manifest_rows: list[dict[str, Any]] | None = None,
     compact_depth: int = 8,
-    fanout: bool = True,
     wal_offsets: bool = False,
 ) -> int:
     """Merge-on-read apply: O(batch) per epoch.
 
     Tombstone-flag the batch and append it as delta files; the base table
-    is neither read nor rewritten.  With ``fanout`` (default) the write
-    needs NO shuffle at all — rows land in delta files with their source
-    partitioning, and LWW resolution + bucket clustering are deferred to
-    readers / the next fold.  Without fanout, the batch is LWW-reduced and
-    bucket-clustered first (one batch-sized shuffle) — finer read pruning,
-    more write-side work.  When the delta stack reaches ``compact_depth``
+    is neither read nor rewritten, and the write needs NO shuffle at all —
+    rows land in delta files with their source partitioning, and LWW
+    resolution + bucket clustering are deferred to readers / the next
+    fold.  Partial images (a batch with ``_set_cols``) persist their cell
+    lists, so a patch flipping one small column on a multi-MB ``html`` row
+    appends bytes proportional to the PATCH; readers and folds then
+    resolve per cell (operators/patch.py).  The projection is aligned to
+    the superset schema in the same select (a narrower batch column
+    upcasts into a widened table type, so the written file always matches
+    the snapshot schema).  When the delta stack reaches ``compact_depth``
     commits the table is folded (the amortised rewrite the reference's
     REINDEX step performs in bulk).
     """
     snap = table.snapshot()
-    _reject_patch_table(snap, "delta_merge_into")
     if snap.is_applied(epoch_id, manifest_rows if wal_offsets else None):
         return snap.version
-    key, ver = snap.key_col, snap.version_col
-    return _delta_append(
-        table,
-        snap,
+    cols = _tombstoned(
         batch,
-        _tombstoned(batch, [key, ver, tiebreak_col]),
-        lambda df: lww_latest(df, key, version_cols=[ver, tiebreak_col]),
-        tiebreak_col,
-        compact_depth,
-        fanout,
+        [snap.key_col, snap.version_col, tiebreak_col],
+        patch=per_cell(batch.columns, snap.schema.names),
+    )
+    schema = _superset_schema(snap, {c: t for c, (_, t) in cols.items()})
+    v = table.commit_delta(
+        _select(batch, cols, schema),
+        schema=schema,
         manifest_rows=manifest_rows,
         epoch_id=epoch_id,
         wal_offsets=wal_offsets,
     )
-
-
-def delta_merge_patch_into(
-    table: LakeTable,
-    batch: DataFrame,
-    tiebreak_col: str,
-    epoch_id: str | list[str] | None = None,
-    manifest_rows: list[dict[str, Any]] | None = None,
-    compact_depth: int = 8,
-    fanout: bool = True,
-    wal_offsets: bool = False,
-) -> int:
-    """Merge-on-read apply for *partial-image* batches: O(batch) per epoch.
-
-    The scale path for minimal-row-image binlogs: a patch flipping one
-    small column on a multi-MB ``html`` row appends bytes proportional to
-    the PATCH, not the row — the base is never read or rewritten.  Delta
-    files persist the ``_set_cols`` cell list; readers resolve per-cell
-    LWW over base ∪ deltas (``read_resolved`` routes patch tables through
-    ``resolve_cells``), and folds reduce with the same associative
-    aggregation, so any fold/batch grouping converges identically
-    (operators/patch.py).  With ``fanout`` the write needs no shuffle;
-    otherwise the batch is cell-pre-reduced and bucket-clustered first.
-    """
-    from aus_land_data_etl_spark.operators.patch import resolve_cells
-
-    snap = table.snapshot()
-    if snap.is_applied(epoch_id, manifest_rows if wal_offsets else None):
-        return snap.version
-    key, ver = snap.key_col, snap.version_col
-    return _delta_append(
-        table,
-        snap,
-        batch,
-        _tombstoned(batch, [key, ver, tiebreak_col], patch=True),
-        lambda df: resolve_cells(df, key, ver, tiebreak_col, deleted_col=DELETED_COL),
-        tiebreak_col,
-        compact_depth,
-        fanout,
-        manifest_rows=manifest_rows,
-        epoch_id=epoch_id,
-        wal_offsets=wal_offsets,
-    )
-
-
-def _is_patch_table(snap) -> bool:
-    from aus_land_data_etl_spark.operators.patch import CELL_VERS, SET_COLS
-
-    names = {f.name for f in snap.schema.fields}
-    return SET_COLS in names or CELL_VERS in names
-
-
-def _reduce_for(table: LakeTable, tiebreak_col: str):
-    """The table's LWW reduction: per-cell for patch tables, per-row
-    otherwise.  Both are associative, so folds/clustering may apply them
-    to any subset of layers."""
-    snap = table.snapshot()
-    if _is_patch_table(snap):
-        from aus_land_data_etl_spark.operators.patch import resolve_cells
-
-        return lambda df: resolve_cells(
-            df, snap.key_col, snap.version_col, tiebreak_col
-        )
-    return lambda df: lww_latest(
-        df, snap.key_col, [snap.version_col, tiebreak_col]
-    )
+    if table.max_delta_depth() >= compact_depth:
+        v = fold_deltas(table, tiebreak_col, min_stack=compact_depth)
+    return v
 
 
 def _align_to(df: DataFrame, schema) -> DataFrame:
@@ -480,7 +304,7 @@ def cluster_fanout_deltas(table: LakeTable, tiebreak_col: str) -> int:
         *[os.path.join(table.root, f) for f in files]
     )
     df = df.repartition(snap.n_buckets, F.col(snap.key_col))
-    df = _reduce_for(table, tiebreak_col)(df)
+    df = resolve(df, snap.key_col, snap.version_col, tiebreak_col)
     df = _align_to(df, snap.schema)  # keep _set_cols etc. readable in situ
     df = df.withColumn(BUCKET_COL, bucket_expr(snap.key_col, snap.n_buckets))
     return table.commit_clustered_deltas(
@@ -548,8 +372,6 @@ def read_current(
     On a z-ordered table (``lake/zorder.py``) every clustered dimension
     prunes, so a time-window or lang probe over the live view opens a
     fraction of the files."""
-    from aus_land_data_etl_spark.operators.patch import CELL_VERS, SET_COLS
-
     df = table.read_resolved(
         tiebreak_col=tiebreak_col, columns=columns, predicates=predicates
     )
@@ -644,8 +466,7 @@ def delete_where(
     )
     if batch.isEmpty():
         return snap.version
-    delta = delta_merge_patch_into if _is_patch_table(snap) else delta_merge_into
-    return delta(
+    return delta_merge_into(
         table,
         batch,
         tiebreak_col,
@@ -686,12 +507,10 @@ def seal_patches(
     its row version: exact whenever the upstream delivered per-key in
     order (the binlog contract), and afterwards an out-of-order patch
     older than a row's version loses whole-row — the documented
-    approximation every row-LWW table already makes.  Row-merge paths
-    (``merge_into``/``delta_merge_into``) are re-enabled by the schema
-    change itself (the guard keys off the ``_cvers`` column).
+    approximation every row-LWW table already makes.  Later full-image
+    batches resolve per row again: the reducer follows the marker
+    columns (``operators.patch.per_cell``), which sealing drops.
     """
-    from aus_land_data_etl_spark.operators.patch import CELL_VERS, SET_COLS
-
     df = table.read_resolved(tiebreak_col=tiebreak_col)
     for c in (CELL_VERS, SET_COLS):
         if c in df.columns:

@@ -815,15 +815,9 @@ class LakeTable:
         keeps a lang-only scan from shuffling multi-MB html blobs, and
         it reaches the parquet reader as ReadSchema pruning.
         """
-        from aus_land_data_etl_spark.operators.dedup import lww_latest
-        from aus_land_data_etl_spark.operators.patch import (
-            CELL_VERS,
-            SET_COLS,
-            resolve_cells,
-        )
+        from aus_land_data_etl_spark.operators.patch import CELL_VERS, SET_COLS, resolve
 
         snap = self.snapshot(version)
-        names = {f.name for f in snap.schema.fields}
 
         def project(df: DataFrame) -> DataFrame:
             if columns is None:
@@ -844,14 +838,9 @@ class LakeTable:
         raw = project(
             self.read(version=version, buckets=buckets, include_deltas=True)
         )
-        if SET_COLS in names or CELL_VERS in names:
-            # partial-image table: row-level LWW would let a whole-row
-            # winner erase cells an older patch still owns — resolve
-            # per cell (operators/patch.py)
-            return resolve_cells(
-                raw, snap.key_col, snap.version_col, tiebreak_col
-            )
-        return lww_latest(raw, snap.key_col, [snap.version_col, tiebreak_col])
+        # per cell on a partial-image table (its marker columns survive
+        # the projection), per row otherwise
+        return resolve(raw, snap.key_col, snap.version_col, tiebreak_col)
 
     def key_bucket(self, key: Any, version: int | None = None) -> int:
         """The bucket id holding ``key`` under this snapshot's layout.
@@ -1195,7 +1184,14 @@ class LakeTable:
         (``is_applied`` answers from the restored watermarks).  History
         is preserved: the bad versions stay time-travelable until
         retention drops them, and the changelog emits the net undo diff
-        across the rollback commit like any other interval."""
+        across the rollback commit like any other interval.
+
+        A branch handle rolls back only to its own version numbers: tags
+        name MAIN versions, so a tag ref raises ``ValueError`` there."""
+        if self.branch_name is not None and not isinstance(ref, int):
+            raise ValueError(
+                "tags name MAIN versions; roll a branch back by version number"
+            )
         target = self.resolve_ref(ref)
         cur = self.snapshot()
         if target == cur.version:
@@ -1551,7 +1547,8 @@ class LakeTable:
                 # silently corrupts their rows on re-read (e.g. a patch
                 # delta losing _set_cols replays as full images).  The
                 # caller must align its frame to the prior schema first
-                # (merge._align_to), as fold_deltas/merge_patch_into do.
+                # (merge._align_to), as fold_deltas and merge_into's per-cell
+                # path do.
                 # Deliberately conservative: the check is on snapshot
                 # schema names, not per-file schemas, so dropping a
                 # column added AFTER old deltas were written also trips
@@ -1636,12 +1633,11 @@ class LakeTable:
         schema: T.StructType | None = None,
         manifest_rows: list[dict[str, Any]] | None = None,
         epoch_id: str | list[str] | None = None,
-        pre_bucketed: bool = False,
-        fanout: bool = False,
         wal_offsets: bool = False,
         max_retries: int = 5,
     ) -> int:
-        """Merge-on-read commit: append the batch's rows as delta files.
+        """Merge-on-read commit: append the batch's rows as fanout (``"*"``)
+        delta files, with no shuffle (``_write_fanout_data``).
 
         O(batch) per epoch — the base is never read or rewritten here;
         readers resolve LWW over base ∪ deltas and ``fold_deltas``
@@ -1653,53 +1649,29 @@ class LakeTable:
         written ONCE; if another committer wins the descriptor O_EXCL race,
         the metadata — delta lists, epoch window, watermarks, schema — is
         rebuilt against the *fresh* snapshot and the commit retried (a
-        delta append conflicts with nothing: it only adds files).  The
-        racer's state is preserved, including a schema it may have evolved
-        (field-name union).  Two exceptions re-raise instead of retrying:
-        the racer already applied this same batch (exactly-once guard →
-        return, no-op) and a rebucket changed the bucket layout our
-        pre-bucketed files were written for (``ConflictError`` — caller
-        re-applies against the new layout).
+        delta append conflicts with nothing: it only adds files, and
+        fanout files carry no bucket layout, so even a racing rebucket
+        rebases cleanly).  The racer's state is preserved, including a
+        schema it may have evolved (field-name union).  If the racer
+        already applied this same batch, the exactly-once guard returns
+        its version instead.
         """
         snap = self.snapshot()
         wm_rows = manifest_rows if wal_offsets else None
         if snap.is_applied(epoch_id, wm_rows):
             return snap.version
-        orig_buckets = snap.n_buckets
         new_version = snap.version + 1
         # data is written once, under the first attempted version's dir;
         # later attempts re-reference the same files (snapshot file lists
         # are plain relative paths — expire reclaims by reference, not by
         # directory name, so a renumbered commit keeps them live)
-        if fanout:
-            written_star = self._write_fanout_data(winners, new_version)
-        else:
-            written_buckets = self._write_bucket_data(
-                winners, new_version, pre_bucketed
-            )
+        written = self._write_fanout_data(winners, new_version)
         for _attempt in range(max_retries + 1):
             delta_files = {k: list(v) for k, v in snap.delta_files.items()}
-            if fanout:
-                delta_files.setdefault("*", []).extend(written_star)
-            else:
-                for b, fs in written_buckets.items():
-                    delta_files.setdefault(b, []).extend(fs)
+            delta_files.setdefault("*", []).extend(written)
             properties = dict(snap.properties)
-            if fanout:
-                # each fanout commit deepens the unclustered "*" backlog by one
-                properties["delta_epochs"] = int(properties.get("delta_epochs", 0)) + 1
-            else:
-                # leveled state: the trigger is the DEEPEST per-bucket stack,
-                # not the commit count — otherwise shallow wide stacks would
-                # re-arm a fold that has nothing to do on every single epoch
-                base = (
-                    int(properties.get("delta_epochs", 0))
-                    if "*" in delta_files
-                    else 0
-                )
-                properties["delta_epochs"] = max(
-                    [base] + [len(fs) for b, fs in delta_files.items() if b != "*"]
-                )
+            # each fanout commit deepens the unclustered "*" backlog by one
+            properties["delta_epochs"] = int(properties.get("delta_epochs", 0)) + 1
             recent, watermarks, pending = snap.advanced_epoch_state(epoch_id, wm_rows)
             if schema is not None:
                 schema_json = json.dumps(
@@ -1731,11 +1703,6 @@ class LakeTable:
                 snap = self.snapshot()  # racer won: rebase on its state
                 if snap.is_applied(epoch_id, wm_rows):
                     return snap.version  # racer applied this very batch
-                if not fanout and snap.n_buckets != orig_buckets:
-                    raise ConflictError(
-                        f"bucket layout changed {orig_buckets}→{snap.n_buckets} "
-                        "mid-commit; re-apply the batch against the new layout"
-                    ) from None
                 new_version = snap.version + 1
         raise ConflictError(
             f"lost the descriptor race {max_retries + 1} times in a row"

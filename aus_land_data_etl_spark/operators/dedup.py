@@ -7,10 +7,9 @@ primitives:
   (used ~10× in the reference, e.g.
   /root/reference/sql/nsw_spatial/tasks/dedup_lot_layer.sql:16-35,
   sql/nsw_gnb/schema/001_APPLY_init.sql:46-67).
-- ``lww_latest``      — aggregate formulation (``max_by(struct, version)``)
-  with optional *two-level salted* reduction for hot keys: partial combine
-  per (key, salt) first, then final per key.  This keeps a 30%-hot-domain
-  CDC stream (north rule) from funnelling one key's events into one task.
+- ``lww_latest``      — aggregate formulation (``max_by(struct, version)``):
+  map-side partial combine per key before the shuffle, so a hot key ships
+  one row per map partition, not one per event.
 - ``canonicalize``    — completeness-ranked LWW: rank by non-null count then
   version (the reference's canonical-row selection,
   sql/nsw_vg/tasks/from_raw_derive/005_populate_lrs/001_setup.sql:30-58).
@@ -48,18 +47,13 @@ def lww_latest(
     df: DataFrame,
     key: str | list[str],
     version_cols: list[str],
-    n_salts: int = 0,
-    salt_source: str | None = None,
 ) -> DataFrame:
     """LWW winner per key as an aggregation (map-side partial combine).
 
     Unlike the window formulation, ``max_by`` benefits from partial
     aggregation: each map task pre-reduces its local rows per key before
     the shuffle, so a key with millions of duplicate events ships only one
-    row per map partition.  With ``n_salts > 0`` an explicit two-level
-    reduction is added (per (key, salt) → per key) which also bounds the
-    reduce-side skew for hot keys; correctness is preserved because max is
-    associative (SURVEY.md §7.4.5 — salting must be two-level).
+    row per map partition.
 
     ``version_cols`` is the total-order version vector, highest wins
     (e.g. ``["warc_ts", "event_id"]``).
@@ -69,25 +63,7 @@ def lww_latest(
     # SQL text: one parse instead of a Column per payload cell
     struct = lambda cs: "struct(" + ", ".join(f"`{c}`" for c in cs) + ")"  # noqa: E731
     winner = F.expr(f"max_by({struct(payload)}, {struct(version_cols)}) AS _win")
-
-    def reduce_df(d: DataFrame, group: list[str]) -> DataFrame:
-        return d.groupBy(*group).agg(winner).select(*group, "_win.*")
-
-    if n_salts and n_salts > 1:
-        salt_base = F.col(salt_source) if salt_source else F.monotonically_increasing_id()
-        # Deterministic salt when a source column is given (preferred for
-        # replay); spark_partition_id is also fine — salt only affects
-        # grouping, never the winner.
-        salt = (
-            F.pmod(F.xxhash64(salt_base), F.lit(n_salts)).cast("int")
-            if salt_source
-            else F.spark_partition_id() % n_salts
-        )
-        df = df.withColumn("_salt", salt)
-        partial = reduce_df(df, keys + ["_salt"]).drop("_salt")
-        # partial dropped _salt from group output columns: re-add payload set
-        return reduce_df(partial, keys)
-    return reduce_df(df, keys)
+    return df.groupBy(*keys).agg(winner).select(*keys, "_win.*")
 
 
 def canonicalize(

@@ -316,10 +316,12 @@ class NearDupIndex:
         """Probe-only: candidate pairs for a batch against corpus ∪ batch,
         WITHOUT mutating the index (e.g. pre-admission screening).  The
         peek generation (current + 1, never persisted) outranks every
-        tombstone, so the probed batch always counts as live."""
+        tombstone, so the probed batch always counts as live.  The pairs
+        are materialised (eager localCheckpoint, as ``add`` does) so a
+        later ``add``/``remove`` cannot change the answer."""
         return self._probe(
             self._signatures(docs, id_col, text_col, self.current_gen() + 1)
-        )
+        ).localCheckpoint(eager=True)
 
     def add(
         self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"

@@ -25,9 +25,15 @@ Spark aggregation):
 - each resolved row persists a ``_cvers`` map (cell → version vector of
   the event that last determined it), which makes the reduction fully
   **associative and delivery-order independent**: merging batches in any
-  grouping — micro-batch boundaries, two-level salt splits, checkpoint
-  replays — converges to the same state, the property the north rule's
+  grouping — micro-batch boundaries, folds, checkpoint replays —
+  converges to the same state, the property the north rule's
   replay/state-equivalence contract demands.
+
+Which reduction a merge, fold or read uses follows from column names
+alone (``per_cell``): a frame or table carrying either marker column
+resolves per cell, anything else per row.  A full-image batch on a
+per-cell table therefore needs no special entry point — with no
+``_set_cols`` its rows are full images, determining every cell.
 
 Rows from tables written before patch support (no ``_cvers``) are
 treated as full images sealed at their row version — exact whenever the
@@ -42,13 +48,37 @@ pre-reduce before the shuffle.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from aus_land_data_etl_spark.operators.dedup import lww_latest
 
 #: array<string> column naming the cells a patch determines; NULL = full image.
 SET_COLS = "_set_cols"
 #: map<string, struct<v,t>> column: cell -> version vector that last set it.
 CELL_VERS = "_cvers"
+
+
+def per_cell(*names: Iterable[str]) -> bool:
+    """Do these column names (a batch's, a snapshot schema's) call for
+    per-cell LWW?  Yes when any carries ``SET_COLS`` or ``CELL_VERS``:
+    row-level LWW there would let a whole-row winner erase cells an older
+    patch still owns."""
+    return any(c in (SET_COLS, CELL_VERS) for cols in names for c in cols)
+
+
+def resolve(
+    df: DataFrame, key: str, version_col: str, tiebreak_col: str
+) -> DataFrame:
+    """One row per key by LWW: per cell (``resolve_cells``) when ``df``'s
+    columns call for it, per row (``lww_latest``) otherwise.  Both are
+    associative, so folds and clustering may apply it to any subset of
+    layers."""
+    if per_cell(df.columns):
+        return resolve_cells(df, key, version_col, tiebreak_col)
+    return lww_latest(df, key, [version_col, tiebreak_col])
 
 
 def resolve_cells(

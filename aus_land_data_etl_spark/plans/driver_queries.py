@@ -2474,17 +2474,17 @@ def q_cdc_patch_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial-image (binlog_row_image=MINIMAL) CDC: a deterministic mix of
     full images, deletes, and **patch** events that each set only a named
     subset of cells — including explicit-NULL assignments — applied in 4
-    micro-batches through ``merge_patch_into`` (per-cell LWW, persisted
+    micro-batches through ``merge_into`` (per-cell LWW, persisted
     ``_cvers``).  The DuckDB oracle recomputes the same state as per-cell
     ``arg_max`` over ALL events at once: equality proves the engine's
     resolution is batching-independent (operators/patch.py)."""
-    from aus_land_data_etl_spark.lake.merge import merge_patch_into, read_current
+    from aus_land_data_etl_spark.lake.merge import merge_into, read_current
 
     table, changes, d = _patch_fixture(spark, sf_dir)
     try:
         for i in range(4):
             batch = changes.filter(F.col("_b") == i).drop("_b")
-            merge_patch_into(table, batch, "event_id", epoch_id=str(i))
+            merge_into(table, batch, "event_id", epoch_id=str(i))
         out = read_current(table, tiebreak_col="event_id").select(
             "url",
             "warc_ts",
@@ -2505,7 +2505,7 @@ def q_cdc_patch_mor_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shares ORACLE_CDC_PATCH — per-cell LWW is associative, so CoW and MoR
     must land byte-identical states."""
     from aus_land_data_etl_spark.lake.merge import (
-        delta_merge_patch_into,
+        delta_merge_into,
         fold_deltas,
         read_current,
     )
@@ -2514,7 +2514,7 @@ def q_cdc_patch_mor_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         for i in range(4):
             batch = changes.filter(F.col("_b") == i).drop("_b")
-            delta_merge_patch_into(
+            delta_merge_into(
                 table, batch, "event_id", epoch_id=str(i), compact_depth=3
             )
         fold_deltas(table, "event_id")
@@ -2586,7 +2586,7 @@ def patch_events_as_wal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdc_patch_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The partial-image stream through the Structured Streaming shell:
-    checkpointed WAL file source → ``apply_patch_batch`` per micro-batch
+    checkpointed WAL file source → ``apply_batch`` per micro-batch
     (content-addressed exactly-once, offset watermarks, O(patch) MoR
     appends) — patches naming ``html`` re-extract the derived ``text``
     cell, so the byte-identical invariant holds per cell."""

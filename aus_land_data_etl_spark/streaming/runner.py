@@ -107,7 +107,6 @@ def run_stream(
     wal_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 2,
-    n_salts: int = 8,
     available_now: bool = True,
     views: list | None = None,
     expire_every: int | None = 16,
@@ -138,6 +137,55 @@ def run_stream(
     ``vacuum_orphans`` (age-gated removal of files no descriptor
     references: dead OCC losers, crash leftovers).  ``None`` disables.
     """
+    return _tail(
+        spark, table, wal_dir, checkpoint_dir, EVENT_SCHEMA,
+        max_files_per_trigger, available_now, views,
+        expire_every, expire_keep_last, vacuum_grace_seconds,
+    )
+
+
+def run_patch_stream(
+    spark: SparkSession,
+    table: LakeTable,
+    wal_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int = 2,
+    available_now: bool = True,
+    expire_every: int | None = 16,
+    expire_keep_last: int = 4,
+    vacuum_grace_seconds: float | None = 3600.0,
+) -> StreamResult:
+    """Tail a *partial-image* WAL (``PATCH_EVENT_SCHEMA`` parquet files)
+    into the table — the minimal-row-image counterpart of
+    :func:`run_stream`: same checkpointed file source, same per-epoch
+    telemetry, same content-addressed exactly-once + offset-watermark
+    guards, same maintenance tick; ``apply_batch`` resolves the rows
+    per cell, so each micro-batch appends O(patch) bytes.
+    """
+    from aus_land_data_etl_spark.cdc.events import PATCH_EVENT_SCHEMA
+
+    return _tail(
+        spark, table, wal_dir, checkpoint_dir, PATCH_EVENT_SCHEMA,
+        max_files_per_trigger, available_now, None,
+        expire_every, expire_keep_last, vacuum_grace_seconds,
+    )
+
+
+def _tail(
+    spark: SparkSession,
+    table: LakeTable,
+    wal_dir: str,
+    checkpoint_dir: str,
+    schema,
+    max_files_per_trigger: int,
+    available_now: bool,
+    views: list | None,
+    expire_every: int | None,
+    expire_keep_last: int,
+    vacuum_grace_seconds: float | None,
+) -> StreamResult:
+    """The file-source → ``foreachBatch(apply_batch)`` loop both runners
+    share; ``schema`` is the WAL's event schema."""
     registry = SchemaRegistry()
     counters = {"batches": 0, "rows": 0}
     metrics: list[dict] = []
@@ -161,7 +209,6 @@ def run_stream(
             batch_df,
             epoch=epoch_id,
             registry=registry,
-            n_salts=n_salts,
             content_keyed=True,
             wal_offsets=True,
             run_manifests=True,
@@ -183,7 +230,7 @@ def run_stream(
                 table.vacuum_orphans(grace_seconds=vacuum_grace_seconds)
 
     reader = (
-        spark.readStream.schema(EVENT_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(wal_dir)
     )
@@ -197,76 +244,6 @@ def run_stream(
     else:
         # continuous tail: process whatever has arrived, leave the query
         # running; the caller holds the handle (returned via .query).
-        q = writer.trigger(processingTime="1 second").start()
-        q.processAllAvailable()
-    return StreamResult(
-        batches=counters["batches"],
-        rows=counters["rows"],
-        final_version=table.current_version(),
-        metrics=metrics,
-        query=None if available_now else q,
-    )
-
-
-def run_patch_stream(
-    spark: SparkSession,
-    table: LakeTable,
-    wal_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 2,
-    available_now: bool = True,
-    expire_every: int | None = 16,
-    expire_keep_last: int = 4,
-    vacuum_grace_seconds: float | None = 3600.0,
-) -> StreamResult:
-    """Tail a *partial-image* WAL (``PATCH_EVENT_SCHEMA`` parquet files)
-    into the table — the minimal-row-image counterpart of
-    :func:`run_stream`: same checkpointed file source, same per-epoch
-    telemetry, same content-addressed exactly-once + offset-watermark
-    guards, same maintenance tick; rows resolve per-cell via
-    ``apply_patch_batch`` so each micro-batch appends O(patch) bytes.
-    """
-    from aus_land_data_etl_spark.cdc.apply import apply_patch_batch
-    from aus_land_data_etl_spark.cdc.events import PATCH_EVENT_SCHEMA
-
-    counters = {"batches": 0, "rows": 0}
-    metrics: list[dict] = []
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        counters["batches"] += 1
-        # metrics ride the manifest job (ONE envelope scan per batch)
-        batch_df, obs_handle = _observe_batch(batch_df)
-        apply_patch_batch(
-            table,
-            batch_df,
-            epoch=epoch_id,
-            content_keyed=True,
-            wal_offsets=True,
-            run_manifests=True,
-        )
-        obs = _drain_observation(obs_handle, epoch_id)
-        metrics.append(obs)
-        counters["rows"] += int(obs["n_events"])
-        # never on a branch handle: retention runs from main, whose sweep
-        # keeps every branch's files
-        main = table.branch_name is None
-        if expire_every and main and counters["batches"] % expire_every == 0:
-            table.expire_snapshots(keep_last=expire_keep_last)
-            if vacuum_grace_seconds is not None:
-                table.vacuum_orphans(grace_seconds=vacuum_grace_seconds)
-
-    reader = (
-        spark.readStream.schema(PATCH_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(wal_dir)
-    )
-    writer = reader.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
         q = writer.trigger(processingTime="1 second").start()
         q.processAllAvailable()
     return StreamResult(

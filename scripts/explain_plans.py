@@ -77,6 +77,28 @@ def digest(plan: str) -> dict[str, object]:
     }
 
 
+def merge_writes(table, batch):
+    """The frames ``merge_into`` (CoW) and ``delta_merge_into`` (MoR) hand
+    to the table's commit for ``batch`` — captured, never written."""
+    from aus_land_data_etl_spark.lake.merge import delta_merge_into, merge_into
+
+    seen = {}
+
+    def capture(mode):
+        def commit(df, **_):
+            seen[mode] = df
+            return table.current_version()
+
+        return commit
+
+    table.commit_buckets = capture("cow")
+    table.commit_delta = capture("mor")
+    touched = list(range(table.snapshot().n_buckets))  # no bucket probe job
+    merge_into(table, batch, "event_id", touched=touched)
+    delta_merge_into(table, batch, "event_id")
+    return seen["cow"], seen["mor"]
+
+
 def cdc_plan_evidence(spark) -> list[str]:
     """Plan evidence for cdc_apply itself (the headline workload):
 
@@ -88,17 +110,12 @@ def cdc_plan_evidence(spark) -> list[str]:
     """
     import tempfile
 
-    from pyspark.sql import functions as F
-
     from aus_land_data_etl_spark.cdc.apply import (
         create_pages_table,
         manifest_frame,
         prepare_batch,
     )
     from aus_land_data_etl_spark.cdc.generator import generate_events
-    from aus_land_data_etl_spark.lake.merge import DELETED_COL, OP_COL
-    from aus_land_data_etl_spark.lake.table import bucket_expr
-    from aus_land_data_etl_spark.operators.dedup import lww_latest
 
     events = generate_events(spark, 2_000, seed=11)
     batch = prepare_batch(events)
@@ -118,22 +135,13 @@ def cdc_plan_evidence(spark) -> list[str]:
 
     with tempfile.TemporaryDirectory(prefix="plan_cdc_") as d:
         table = create_pages_table(spark, d, n_buckets=8)
-        snap = table.snapshot()
-        key, ver = snap.key_col, snap.version_col
-        src = batch.withColumn(
-            DELETED_COL, F.coalesce(F.col(OP_COL) == "delete", F.lit(False))
-        ).drop(OP_COL, "source_partition", "source_offset")
-        current = table.read()
-        if DELETED_COL not in current.columns:
-            current = current.withColumn(DELETED_COL, F.lit(False))
-        merged = current.unionByName(src, allowMissingColumns=True)
-        merged = merged.repartition(snap.n_buckets, F.col(key))
-        resolved = lww_latest(merged, key, version_cols=[ver, "event_id"])
-        merge_plan = formatted_plan(resolved)
+        cow, mor = merge_writes(
+            table, batch.drop("source_partition", "source_offset")
+        )
+        merge_plan = formatted_plan(cow)
         dm = digest(merge_plan)
         # fanout delta write: the frame is written with source partitioning
-        fan_plan = formatted_plan(src)
-        df_fan = digest(fan_plan)
+        df_fan = digest(formatted_plan(mor))
     assert dm["shuffle_exchanges"] == 1, (
         f"merge path has {dm['shuffle_exchanges']} exchanges, want 1"
     )
@@ -379,12 +387,6 @@ def patch_plan_evidence(spark) -> list[str]:
       merge (repartition-by-key reused by the cell groupBy);
     - the MoR patch fanout delta write needs no shuffle at all.
     """
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from aus_land_data_etl_spark.lake.merge import DELETED_COL, OP_COL
-    from aus_land_data_etl_spark.operators.patch import SET_COLS, resolve_cells
     from aus_land_data_etl_spark.plans.driver_queries import _patch_fixture
 
     def _py_udf_nodes(plan: str) -> int:
@@ -411,23 +413,12 @@ def patch_plan_evidence(spark) -> list[str]:
 
     table, changes, d = _patch_fixture(spark, "/root/testdata/sf0.001")
     try:
-        snap = table.snapshot()
-        src = (
-            changes.drop("_b")
-            .withColumn(
-                DELETED_COL, F.coalesce(F.col(OP_COL) == "delete", F.lit(False))
-            )
-            .withColumn(SET_COLS, F.when(F.col(OP_COL) == "patch", F.col(SET_COLS)))
-            .drop(OP_COL)
-        )
-        merged = src.repartition(snap.n_buckets, F.col(snap.key_col))
-        resolved = resolve_cells(
-            merged, snap.key_col, snap.version_col, "event_id"
-        )
-        plan = formatted_plan(resolved)
+        # the batch names its cells in _set_cols: both merges take the
+        # per-cell path
+        cow, mor = merge_writes(table, changes.drop("_b"))
+        plan = formatted_plan(cow)
         dm = digest(plan)
-        fan_plan = formatted_plan(src)
-        df_fan = digest(fan_plan)
+        df_fan = digest(formatted_plan(mor))
     finally:
         import shutil as _sh
 

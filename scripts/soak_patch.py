@@ -64,9 +64,9 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from aus_land_data_etl_spark.lake.merge import (
-        delta_merge_patch_into,
+        delta_merge_into,
         fold_deltas,
-        merge_patch_into,
+        merge_into,
         read_current,
     )
     from aus_land_data_etl_spark.lake.zorder import cluster_zorder_buckets
@@ -136,11 +136,11 @@ def main() -> None:
             mode = rng.choice(["mor", "mor", "cow"])
             modes.append(mode)
             if mode == "mor":
-                delta_merge_patch_into(
+                delta_merge_into(
                     table, batch, "event_id", epoch_id=str(i), compact_depth=4
                 )
             else:
-                merge_patch_into(table, batch, "event_id", epoch_id=str(i))
+                merge_into(table, batch, "event_id", epoch_id=str(i))
             if i == 5:
                 # incremental z-order with live patch deltas mid-stream
                 cluster_zorder_buckets(

@@ -153,6 +153,26 @@ def test_branch_validation_and_guards(spark, staged):
     t.drop_branch("a")
 
 
+def test_rollback_to_tag_refused_on_branch_handle(spark, staged):
+    """Tags name MAIN versions, but a branch handle opens its own
+    descriptors: rolling a branch back to a tag used to restore the
+    branch's same-numbered version instead of the tagged main state.
+    It now raises; a numeric rollback on the branch still works."""
+    t, batches = staged
+    fork_state = _state(t)
+    br = t.create_branch("wap")
+    fork_v = br.current_version()
+    apply_batch(br, batches[1], epoch=1)
+    apply_batch(t, batches[2], epoch=2)
+    t.tag("main-2")  # same number as the branch's staged version
+    staged_v, staged_state = br.current_version(), _state(br)
+    with pytest.raises(ValueError, match="tags name MAIN versions"):
+        br.rollback_to("main-2")
+    assert br.current_version() == staged_v and _state(br) == staged_state
+    br.rollback_to(fork_v)
+    assert _state(br) == fork_state
+
+
 def test_retention_refuses_branch_handle(spark, staged):
     """Retention computed from a branch handle sees only that branch's
     descriptors, so it used to delete main's snapshot descriptors and

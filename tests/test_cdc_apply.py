@@ -232,9 +232,9 @@ def test_unknown_schema_version_dead_letters(spark, events, tmp_table_dir, tmp_p
 def test_extreme_hot_domain_convergence(spark, tmp_table_dir):
     """Skew stress (north star: 'skew from hot domains'): 95% of events on
     one domain must still converge byte-identically in BOTH modes — the
-    salted CoW path (two-level LWW reduce bounds any one task's share of
-    the hot key) and the MoR path (fanout write never shuffles on the
-    key at all)."""
+    CoW path (the LWW aggregate combines map-side, so a hot key ships one
+    row per map task) and the MoR path (fanout write never shuffles on
+    the key at all)."""
     hot = generate_events(spark, 4000, seed=44, hot_fraction=0.95, n_urls=300)
     want = state_fingerprint(
         expected_final(hot).select(
@@ -249,7 +249,7 @@ def test_extreme_hot_domain_convergence(spark, tmp_table_dir):
         try:
             t = create_pages_table(spark, d, n_buckets=8)
             for i, b in enumerate(split_batches(hot, 4)):
-                apply_batch(t, b, epoch=i, mode=mode, n_salts=8)
+                apply_batch(t, b, epoch=i, mode=mode)
             got = state_fingerprint(
                 read_current(t).select(
                     "url", "warc_ts", "event_id", "text", "lang", "fetch_status"

@@ -307,7 +307,7 @@ def test_changelog_patch_table_cell_only_change_not_suppressed(
 
     from pyspark.sql import Row
 
-    from aus_land_data_etl_spark.cdc.apply import apply_patch_batch
+    from aus_land_data_etl_spark.cdc.apply import apply_batch
     from aus_land_data_etl_spark.cdc.events import PATCH_EVENT_SCHEMA
 
     def pev(eid, op, url, ts_sec, sets, html, lang, off):
@@ -322,7 +322,7 @@ def test_changelog_patch_table_cell_only_change_not_suppressed(
     t = create_pages_table(spark, tmp_table_dir, n_buckets=4)
     # v1: full image at ts=10 (lang en), then a NEWER patch at ts=30
     # naming only html — row version becomes 30, lang cell stays at 10
-    apply_patch_batch(
+    apply_batch(
         t,
         spark.createDataFrame(
             [
@@ -339,7 +339,7 @@ def test_changelog_patch_table_cell_only_change_not_suppressed(
     # OUT-OF-ORDER patch at ts=20 (< row version 30) naming only lang:
     # the lang cell's winner moves 10→20 ("en"→"fr") while the row
     # (version, tiebreak) stays (30, e2)
-    apply_patch_batch(
+    apply_batch(
         t,
         spark.createDataFrame(
             [pev("e3", "patch", "https://a.example.com/p", 20, ["lang"],
@@ -357,7 +357,7 @@ def test_changelog_patch_table_cell_only_change_not_suppressed(
     # identical-image patch: re-assert lang='fr' at ts=25 (cell winner
     # advances 20→25 but the resolved VALUE is unchanged) → net feed
     # stays empty
-    apply_patch_batch(
+    apply_batch(
         t,
         spark.createDataFrame(
             [pev("e4", "patch", "https://a.example.com/p", 25, ["lang"],

@@ -112,19 +112,16 @@ def test_race_on_identical_batch_is_exactly_once(spark, tmp_table_dir, monkeypat
 
 
 def test_rebucket_mid_commit(spark, tmp_table_dir, monkeypatch):
-    """Rebucket landing mid-commit: a FANOUT delta (no bucket column —
-    rows cluster at fold time under whatever layout is then current)
-    rebases cleanly; a PRE-BUCKETED delta, whose files are keyed to the
-    old layout, must refuse (ConflictError) rather than mis-bucket."""
+    """Rebucket landing mid-commit: a delta append (fanout files carry no
+    bucket column — rows cluster at fold time under whatever layout is
+    then current) rebases cleanly onto the new layout and converges."""
     from aus_land_data_etl_spark.cdc.apply import prepare_batch
-    from aus_land_data_etl_spark.lake.merge import delta_merge_into
 
     events = generate_events(spark, 400, seed=33).localCheckpoint(eager=True)
     t1 = create_pages_table(spark, tmp_table_dir, n_buckets=4)
     apply_batch(t1, _seg(events, 0), epoch=0, compact_depth=99)
     t2 = LakeTable(spark, tmp_table_dir)
 
-    # fanout path: rebases onto the new layout and still converges
     _race_once(monkeypatch, t1, lambda: t2.rebucket(8))
     apply_batch(t1, _seg(events, 1), epoch=1, compact_depth=99)
     snap = t1.snapshot()
@@ -138,22 +135,6 @@ def test_rebucket_mid_commit(spark, tmp_table_dir, monkeypatch):
     ).filter(F.col("op") != "delete")
     assert read_current(t1).count() == want.count()
 
-    # pre-bucketed path: layout changed under us -> refuse
-    monkeypatch.undo()
-    _race_once(monkeypatch, t1, lambda: t2.rebucket(16))
-    with pytest.raises(ConflictError, match="bucket layout"):
-        delta_merge_into(
-            t1,
-            prepare_batch(_seg(events, 2)),
-            tiebreak_col="event_id",
-            epoch_id="2",
-            fanout=False,
-            compact_depth=99,
-        )
-    # the table itself is fine: re-applying against the new layout works
-    apply_batch(t1, _seg(events, 2), epoch=2, compact_depth=99)
-    assert t1.snapshot().n_buckets == 16
-
 
 def test_commit_refuses_stale_planning_snapshot(spark, tmp_table_dir):
     """Lost-update guard (round-5 review): a rewrite planned against
@@ -166,7 +147,11 @@ def test_commit_refuses_stale_planning_snapshot(spark, tmp_table_dir):
 
     from pyspark.sql import types as T
 
-    from aus_land_data_etl_spark.lake.merge import delta_merge_into, read_current
+    from aus_land_data_etl_spark.lake.merge import (
+        cluster_fanout_deltas,
+        delta_merge_into,
+        read_current,
+    )
     from aus_land_data_etl_spark.lake.table import BUCKET_COL, bucket_expr
     from aus_land_data_etl_spark.lake.zorder import cluster_zorder_buckets
 
@@ -194,7 +179,8 @@ def test_commit_refuses_stale_planning_snapshot(spark, tmp_table_dir):
     late = spark.createDataFrame(
         [("u1", dt.datetime(2024, 1, 2), "e-late", "late-win")], schema
     ).withColumn("op", F.lit("update"))
-    delta_merge_into(t, late, "event_id", compact_depth=100, fanout=False)
+    delta_merge_into(t, late, "event_id", compact_depth=100)
+    cluster_fanout_deltas(t, "event_id")  # a per-bucket layer in bucket 0/1
 
     # the stale rewrite: resolved rows FROM the planning snapshot
     resolved = t.read(version=planning_snap.version).withColumn(

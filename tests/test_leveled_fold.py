@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aus_land_data_etl_spark.lake.merge import (
+    cluster_fanout_deltas,
     delta_merge_into,
     fold_deltas,
     read_current,
@@ -77,17 +78,18 @@ def test_threshold_fold_rewrites_only_deep_stacks(spark, table):
     table.overwrite(
         _batch(spark, hot + cold, 1, "base").drop("op")
     )
-    # 3 delta layers on the hot bucket, 1 on the cold bucket (non-fanout →
-    # per-bucket delta files directly)
+    # 3 delta layers on the hot bucket, 1 on the cold bucket (each fanout
+    # append clustered into a per-bucket layer before the next)
     for ts in (2, 3, 4):
         delta_merge_into(
             table, _batch(spark, hot, ts, f"hot-{ts}"), "event_id",
-            compact_depth=100, fanout=False,
+            compact_depth=100,
         )
+        cluster_fanout_deltas(table, "event_id")
     delta_merge_into(
-        table, _batch(spark, cold, 5, "cold-5"), "event_id",
-        compact_depth=100, fanout=False,
+        table, _batch(spark, cold, 5, "cold-5"), "event_id", compact_depth=100
     )
+    cluster_fanout_deltas(table, "event_id")
     snap = table.snapshot()
     assert len(snap.delta_files[str(hot_b)]) == 3
     assert len(snap.delta_files[str(cold_b)]) == 1
@@ -124,7 +126,7 @@ def test_fanout_fold_below_threshold_only_clusters(spark, table):
     for ts in (2, 3):
         delta_merge_into(
             table, _batch(spark, all_urls, ts, f"fan-{ts}"), "event_id",
-            compact_depth=100, fanout=True,
+            compact_depth=100,
         )
     assert "*" in table.snapshot().delta_files
     expected = {(r["url"], r["text"]) for r in read_current(table).collect()}

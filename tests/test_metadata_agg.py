@@ -242,7 +242,7 @@ def test_count_minmax_on_patch_table_with_live_deltas(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from aus_land_data_etl_spark.cdc.apply import (
-        apply_patch_batch,
+        apply_batch,
         create_pages_table,
     )
     from aus_land_data_etl_spark.cdc.events import PATCH_EVENT_SCHEMA
@@ -262,7 +262,7 @@ def test_count_minmax_on_patch_table_with_live_deltas(spark, tmp_path):
     df = spark.createDataFrame(to_patch_rows(events), PATCH_EVENT_SCHEMA)
     for i, mode in enumerate(["mor", "cow"]):
         batch = df.filter(F.pmod(F.xxhash64("event_id"), F.lit(2)) == i)
-        apply_patch_batch(table, batch, epoch=i, mode=mode)
+        apply_batch(table, batch, epoch=i, mode=mode)
     assert table.snapshot().delta_files, "repro needs a live delta stack"
 
     cur = read_current(table)

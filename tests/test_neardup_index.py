@@ -110,6 +110,23 @@ def test_candidates_for_probes_without_mutation(spark, tmp_path):
     assert _pairs(idx2.candidates_for(_docs(spark, list(range(12, 18))))) == probe
 
 
+def test_candidates_for_answers_as_of_the_call(spark, tmp_path):
+    """A probe's pairs are fixed when ``candidates_for`` returns: a
+    near-duplicate added afterwards, and the compaction that replaces the
+    files the probe planned over, must not change (or break) the answer
+    when the probe is collected later."""
+    idx = NearDupIndex.build(
+        _docs(spark, list(range(0, 12))), str(tmp_path / "ndi"), **PARAMS
+    )
+    want = _pairs(idx.candidates_for(_docs(spark, [12])))
+    probe = idx.candidates_for(_docs(spark, [12]))
+    # doc 24 has the same text as doc 12: a near-duplicate of the probe
+    assert any(24 in pair for pair in _pairs(idx.add(_docs(spark, [24]))))
+    idx.compact()
+    got = _pairs(probe)
+    assert got == want and all(24 not in pair for pair in got)
+
+
 def test_probe_prunes_unprobed_bucket_directories(spark, tmp_path):
     """Directory-level pruning, proven the same two ways as IvfIndex:
     (a) the executed plan carries the bucket partition filter;

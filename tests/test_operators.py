@@ -1,4 +1,4 @@
-"""Operator unit tests: salted LWW equivalence, canonicalisation,
+"""Operator unit tests: LWW against a Python oracle, canonicalisation,
 dedup_ml pipelines, similarity recall, unnest, joins."""
 
 from __future__ import annotations
@@ -28,21 +28,19 @@ from aus_land_data_etl_spark.operators.similarity import (
 )
 
 
-def test_salted_lww_equals_unsalted(spark):
-    """Two-level salted reduction must be exactly equivalent to the plain
-    aggregate (max is associative) — SURVEY §7.4.5."""
-    df = spark.range(20_000).select(
-        F.concat(F.lit("k"), F.pmod(F.col("id"), F.lit(7)).cast("string")).alias("key"),
-        F.col("id").alias("ver"),
-        F.concat(F.lit("e"), F.col("id").cast("string")).alias("eid"),
-        (F.col("id") * 3).alias("payload"),
-    )
-    plain = lww_latest(df, "key", ["ver", "eid"])
-    salted = lww_latest(df, "key", ["ver", "eid"], n_salts=16, salt_source="eid")
-    a = {tuple(r) for r in plain.collect()}
-    b = {tuple(r) for r in salted.collect()}
-    assert a == b
-    assert len(a) == 7
+def test_lww_latest_matches_python_oracle(spark):
+    """The aggregate LWW keeps, per key, the row with the greatest
+    (ver, eid) — each key's versions tie in threes, so the string
+    tiebreak decides."""
+    rows = [(f"k{i % 7}", i // 21, f"e{i}", i * 3) for i in range(2_000)]
+    df = spark.createDataFrame(rows, "key string, ver long, eid string, payload long")
+    want: dict[str, tuple] = {}
+    for r in rows:
+        if r[0] not in want or r[1:3] > want[r[0]][1:3]:
+            want[r[0]] = r
+    got = {tuple(r) for r in lww_latest(df, "key", ["ver", "eid"]).collect()}
+    assert got == set(want.values())
+    assert len(got) == 7
 
 
 def test_canonicalize_completeness_rank(spark):

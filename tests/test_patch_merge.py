@@ -3,8 +3,8 @@
 Covers the contract documented in operators/patch.py:
 explicit-NULL patches, patch-after-delete resurrection, out-of-order
 patches, associativity across arbitrary batch splits, exactly-once
-replay, and the merge guard that keeps row-level LWW off cell-versioned
-tables.
+replay, and full-image batches on cell-versioned tables resolving per
+cell (the reducer follows the table as well as the batch).
 """
 
 from __future__ import annotations
@@ -16,9 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aus_land_data_etl_spark.lake.merge import (
-    delta_merge_patch_into,
+    delta_merge_into,
     merge_into,
-    merge_patch_into,
     read_current,
 )
 from aus_land_data_etl_spark.lake.table import LakeTable
@@ -66,7 +65,7 @@ def _state(table):
 
 def test_patch_overlays_only_named_cells(spark, tmp_table_dir):
     t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -84,7 +83,7 @@ def test_patch_overlays_only_named_cells(spark, tmp_table_dir):
 
 def test_explicit_null_patch_wins(spark, tmp_table_dir):
     t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -102,7 +101,7 @@ def test_explicit_null_patch_wins(spark, tmp_table_dir):
 
 def test_out_of_order_patches_within_batch(spark, tmp_table_dir):
     t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -124,7 +123,7 @@ def test_old_patch_across_batches_still_wins_its_cell(spark, tmp_table_dir):
     it is newest for — the persisted ``_cvers`` map carries per-cell
     versions across the fold, so batching cannot change the outcome."""
     t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -139,7 +138,7 @@ def test_old_patch_across_batches_still_wins_its_cell(spark, tmp_table_dir):
     # ts=20 patch arrives AFTER the ts=40 patch was folded in.  Row
     # version is 40, but text was last determined at ts=10 — the late
     # patch (ts=20) must override text while lang stays at ts=40's 'de'.
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -153,7 +152,7 @@ def test_old_patch_across_batches_still_wins_its_cell(spark, tmp_table_dir):
 
 def test_patch_after_delete_resurrects_sparse_row(spark, tmp_table_dir):
     t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -166,7 +165,7 @@ def test_patch_after_delete_resurrects_sparse_row(spark, tmp_table_dir):
         epoch_id="0",
     )
     assert "a" not in _state(t)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -181,7 +180,7 @@ def test_patch_after_delete_resurrects_sparse_row(spark, tmp_table_dir):
 
 def test_delete_newer_than_patch_wins(spark, tmp_table_dir):
     t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -193,7 +192,7 @@ def test_delete_newer_than_patch_wins(spark, tmp_table_dir):
         "event_id",
         epoch_id="0",
     )
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -223,7 +222,7 @@ def test_associative_across_any_batching(spark, tmp_table_dir, splits):
     t = _mk_table(spark, tmp_table_dir)
     for i in range(splits):
         batch = [r for j, r in enumerate(rows) if j % splits == i]
-        merge_patch_into(t, _events(spark, batch), "event_id", epoch_id=str(i))
+        merge_into(t, _events(spark, batch), "event_id", epoch_id=str(i))
     # expected per-cell LWW state, independent of the split:
     assert _state(t) == {
         "a": ("t3", "fr", 5.0, TS(50)),
@@ -242,32 +241,39 @@ def test_exactly_once_replay(spark, tmp_table_dir):
             ("a", 20, "e2", "patch", None, None, 7.0, ["score"]),
         ],
     )
-    v1 = merge_patch_into(t, b, "event_id", epoch_id="0")
-    v2 = merge_patch_into(t, b, "event_id", epoch_id="0")  # replay
+    v1 = merge_into(t, b, "event_id", epoch_id="0")
+    v2 = merge_into(t, b, "event_id", epoch_id="0")  # replay
     assert v1 == v2
     assert _state(t)["a"] == ("full", "en", 7.0, TS(20))
 
 
 def test_row_lww_guard_on_patch_tables(spark, tmp_table_dir):
-    t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
-        t,
-        _events(spark, [("a", 10, "e1", "insert", "x", "en", 1.0, None)]),
-        "event_id",
-        epoch_id="0",
-    )
-    full = _events(
-        spark, [("a", 20, "e2", "update", "y", "de", 2.0, None)]
-    ).drop(SET_COLS)
-    with pytest.raises(ValueError, match="merge_patch_into"):
-        merge_into(t, full, "event_id", epoch_id="1")
+    """A full-image batch (no ``_set_cols``) on a cell-versioned table
+    resolves per cell as full images, through either merge: its cells
+    land at its own version and the table stays cell-versioned."""
+    import os
+
+    for name, merge in (("cow", merge_into), ("mor", delta_merge_into)):
+        t = _mk_table(spark, os.path.join(tmp_table_dir, name))
+        merge_into(
+            t,
+            _events(spark, [("a", 10, "e1", "insert", "x", "en", 1.0, None)]),
+            "event_id",
+            epoch_id="0",
+        )
+        full = _events(
+            spark, [("a", 20, "e2", "update", "y", "de", 2.0, None)]
+        ).drop(SET_COLS)
+        merge(t, full, "event_id", epoch_id="1")
+        assert _state(t)["a"] == ("y", "de", 2.0, TS(20)), name
+        assert CELL_VERS in t.read_resolved().columns, name
 
 
 def test_schema_evolution_under_patches(spark, tmp_table_dir):
     """A patch naming a column the table has never seen adds it (nullable)
     and determines it for that key only."""
     t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -282,7 +288,7 @@ def test_schema_evolution_under_patches(spark, tmp_table_dir):
     evolved = _events(
         spark, [("a", 20, "e3", "patch", None, None, None, ["fetch_status"])]
     ).withColumn("fetch_status", F.lit(404))
-    merge_patch_into(t, evolved, "event_id", epoch_id="1")
+    merge_into(t, evolved, "event_id", epoch_id="1")
     got = {
         r["url"]: r["fetch_status"]
         for r in read_current(t).select("url", "fetch_status").collect()
@@ -292,8 +298,8 @@ def test_schema_evolution_under_patches(spark, tmp_table_dir):
 
 def test_resolve_cells_is_reapplicable(spark):
     """The output of resolve_cells is a valid stored-row input: reducing
-    in two stages equals reducing in one (the associativity the two-level
-    salt split and MoR folds rely on)."""
+    in two stages equals reducing in one (the associativity MoR folds and
+    merges over any batch split rely on)."""
     df = _events(
         spark,
         [
@@ -330,7 +336,7 @@ def test_resolve_cells_is_reapplicable(spark):
 
 
 # ---------------------------------------------------------------------------
-# Merge-on-read patch path (delta_merge_patch_into)
+# Merge-on-read patch path (delta_merge_into with partial images)
 # ---------------------------------------------------------------------------
 
 MOR_ROWS = [
@@ -351,18 +357,17 @@ MOR_WANT = {
 }
 
 
-@pytest.mark.parametrize("fanout", [True, False])
-def test_mor_patch_apply_matches_cow(spark, tmp_table_dir, fanout):
+def test_mor_patch_apply_matches_cow(spark, tmp_table_dir):
     """O(batch) delta appends of partial images resolve to the same state
     as the copy-on-write path, read straight off the unfolded stacks."""
-    from aus_land_data_etl_spark.lake.merge import delta_merge_patch_into
+    from aus_land_data_etl_spark.lake.merge import delta_merge_into
 
     t = _mk_table(spark, tmp_table_dir)
     for i in range(3):
         batch = [r for j, r in enumerate(MOR_ROWS) if j % 3 == i]
-        delta_merge_patch_into(
+        delta_merge_into(
             t, _events(spark, batch), "event_id", epoch_id=str(i),
-            fanout=fanout, compact_depth=99,
+            compact_depth=99,
         )
     assert t.snapshot().delta_files  # really is merge-on-read
     assert _state(t) == MOR_WANT
@@ -373,12 +378,12 @@ def test_mor_patch_fold_preserves_cell_versions(spark, tmp_table_dir):
     out-of-order patch arriving AFTER the fold still wins only the cell
     it is newest for."""
     from aus_land_data_etl_spark.lake.merge import (
-        delta_merge_patch_into,
+        delta_merge_into,
         fold_deltas,
     )
 
     t = _mk_table(spark, tmp_table_dir)
-    delta_merge_patch_into(
+    delta_merge_into(
         t,
         _events(
             spark,
@@ -395,7 +400,7 @@ def test_mor_patch_fold_preserves_cell_versions(spark, tmp_table_dir):
     assert not t.snapshot().delta_files  # folded to base
     # late text patch (ts=20): older than the folded row version (40) but
     # newer than text's cell version (10) — must win text only
-    delta_merge_patch_into(
+    delta_merge_into(
         t,
         _events(spark, [("a", 20, "e2", "patch", "late", None, None, ["text"])]),
         "event_id",
@@ -408,12 +413,12 @@ def test_mor_patch_fold_preserves_cell_versions(spark, tmp_table_dir):
 def test_mor_patch_auto_fold_converges(spark, tmp_table_dir):
     """Hitting compact_depth mid-stream triggers the leveled fold; the
     resolved state is unchanged (associativity through the fold)."""
-    from aus_land_data_etl_spark.lake.merge import delta_merge_patch_into
+    from aus_land_data_etl_spark.lake.merge import delta_merge_into
 
     t = _mk_table(spark, tmp_table_dir)
     for i in range(3):
         batch = [r for j, r in enumerate(MOR_ROWS) if j % 3 == i]
-        delta_merge_patch_into(
+        delta_merge_into(
             t, _events(spark, batch), "event_id", epoch_id=str(i),
             compact_depth=2,
         )
@@ -421,10 +426,10 @@ def test_mor_patch_auto_fold_converges(spark, tmp_table_dir):
 
 
 def test_delete_where_routes_to_patch_path(spark, tmp_table_dir):
-    from aus_land_data_etl_spark.lake.merge import delete_where, merge_patch_into
+    from aus_land_data_etl_spark.lake.merge import delete_where, merge_into
 
     t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -446,10 +451,10 @@ def test_changelog_over_patch_table(spark, tmp_table_dir):
     patch-table snapshots classifies a cell-only change as an update
     carrying the fully resolved after-image."""
     from aus_land_data_etl_spark.lake.changelog import read_changes
-    from aus_land_data_etl_spark.lake.merge import merge_patch_into
+    from aus_land_data_etl_spark.lake.merge import merge_into
 
     t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -462,7 +467,7 @@ def test_changelog_over_patch_table(spark, tmp_table_dir):
         epoch_id="0",
     )
     v1 = t.current_version()
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -489,10 +494,10 @@ def test_rebucket_preserves_cell_versions(spark, tmp_table_dir):
     """Bucket-count evolution on a patch table with UNFOLDED delta stacks
     must carry the per-cell versions into the new layout: a late
     out-of-order patch after the rebucket still wins only its cell."""
-    from aus_land_data_etl_spark.lake.merge import delta_merge_patch_into
+    from aus_land_data_etl_spark.lake.merge import delta_merge_into
 
     t = _mk_table(spark, tmp_table_dir)
-    delta_merge_patch_into(
+    delta_merge_into(
         t,
         _events(
             spark,
@@ -507,7 +512,7 @@ def test_rebucket_preserves_cell_versions(spark, tmp_table_dir):
     )
     assert t.snapshot().delta_files
     t.rebucket(8)
-    delta_merge_patch_into(
+    delta_merge_into(
         t,
         _events(spark, [("a", 20, "e2", "patch", "late", None, None, ["text"])]),
         "event_id",
@@ -523,7 +528,7 @@ def test_seal_patches_reenables_row_merges(spark, tmp_table_dir):
     from aus_land_data_etl_spark.lake.merge import merge_into, seal_patches
 
     t = _mk_table(spark, tmp_table_dir)
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -547,10 +552,10 @@ def test_seal_patches_reenables_row_merges(spark, tmp_table_dir):
     assert _state(t)["a"] == ("t3", "de", 3.0, TS(30))
 
 
-def test_cow_mode_apply_patch_batch_matches_mor(spark, tmp_table_dir):
+def test_cow_mode_patch_batch_matches_mor(spark, tmp_table_dir):
     import os
 
-    from aus_land_data_etl_spark.cdc.apply import apply_patch_batch, create_pages_table
+    from aus_land_data_etl_spark.cdc.apply import apply_batch, create_pages_table
     from aus_land_data_etl_spark.plans.driver_queries import patch_events_as_wal
 
     changes = patch_events_as_wal(spark, "/root/testdata/sf0.001").localCheckpoint(
@@ -560,8 +565,8 @@ def test_cow_mode_apply_patch_batch_matches_mor(spark, tmp_table_dir):
     t_cow = create_pages_table(spark, os.path.join(tmp_table_dir, "cow"), n_buckets=8)
     t_mor = create_pages_table(spark, os.path.join(tmp_table_dir, "mor"), n_buckets=8)
     for i, h in enumerate(halves):
-        apply_patch_batch(t_cow, h, epoch=i, mode="cow")
-        apply_patch_batch(t_mor, h, epoch=i, mode="mor")
+        apply_batch(t_cow, h, epoch=i, mode="cow")
+        apply_batch(t_mor, h, epoch=i, mode="mor")
     as_map = lambda t: {  # noqa: E731
         r["url"]: (r["text"], r["lang"], r["event_id"])
         for r in read_current(t).collect()
@@ -587,7 +592,7 @@ def test_incremental_view_over_patch_table(spark, tmp_table_dir):
         keys=["lang"],
         aggs=[AggSpec("n", "count")],
     )
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -602,7 +607,7 @@ def test_incremental_view_over_patch_table(spark, tmp_table_dir):
     )
     view.refresh()
     # a cell-only patch moves 'a' from en to fr; a delete removes 'c'
-    merge_patch_into(
+    merge_into(
         t,
         _events(
             spark,
@@ -628,10 +633,10 @@ def test_projection_pushdown_below_resolution(spark, tmp_table_dir):
     import io
     from contextlib import redirect_stdout
 
-    from aus_land_data_etl_spark.lake.merge import delta_merge_patch_into
+    from aus_land_data_etl_spark.lake.merge import delta_merge_into
 
     t = _mk_table(spark, tmp_table_dir)
-    delta_merge_patch_into(
+    delta_merge_into(
         t,
         _events(
             spark,
@@ -673,10 +678,6 @@ def test_type_widening_through_delta_paths(spark, tmp_table_dir):
     import datetime as _dt
     import os
 
-    from aus_land_data_etl_spark.lake.merge import (
-        delta_merge_into,
-        delta_merge_patch_into,
-    )
     from aus_land_data_etl_spark.lake.table import LakeTable
 
     D = _dt.datetime
@@ -688,25 +689,23 @@ def test_type_widening_through_delta_paths(spark, tmp_table_dir):
             T.StructField("score", T.IntegerType()),
         ]
     )
-    for name, merge in (
-        ("row", delta_merge_into),
-        ("patch", delta_merge_patch_into),
-    ):
+    ev = "url string, warc_ts timestamp, event_id string, op string, score "
+    for name, cells in (("row", ""), ("patch", ", _set_cols array<string>")):
         t = LakeTable.create(
             spark, os.path.join(tmp_table_dir, name), schema=schema,
             key_col="url", version_col="warc_ts", n_buckets=2,
         )
+        # the patch variant's batches carry _set_cols (all NULL: full images)
+        extra = (None,) if cells else ()
         b1 = spark.createDataFrame(
-            [("a", D(2024, 1, 1), "e1", "insert", 5)],
-            "url string, warc_ts timestamp, event_id string, op string, score int",
+            [("a", D(2024, 1, 1), "e1", "insert", 5, *extra)], ev + "int" + cells
         )
-        merge(t, b1, "event_id", epoch_id="0", compact_depth=99)
+        delta_merge_into(t, b1, "event_id", epoch_id="0", compact_depth=99)
         big = 5_000_000_000
         b2 = spark.createDataFrame(
-            [("b", D(2024, 1, 2), "e2", "insert", big)],
-            "url string, warc_ts timestamp, event_id string, op string, score long",
+            [("b", D(2024, 1, 2), "e2", "insert", big, *extra)], ev + "long" + cells
         )
-        merge(t, b2, "event_id", epoch_id="1", compact_depth=99)
+        delta_merge_into(t, b2, "event_id", epoch_id="1", compact_depth=99)
         assert (
             dict((f.name, f.dataType.typeName()) for f in t.snapshot().schema.fields)[
                 "score"
@@ -714,10 +713,9 @@ def test_type_widening_through_delta_paths(spark, tmp_table_dir):
             == "long"
         )
         b3 = spark.createDataFrame(  # narrower batch after widening
-            [("c", D(2024, 1, 3), "e3", "insert", 7)],
-            "url string, warc_ts timestamp, event_id string, op string, score int",
+            [("c", D(2024, 1, 3), "e3", "insert", 7, *extra)], ev + "int" + cells
         )
-        merge(t, b3, "event_id", epoch_id="2", compact_depth=99)
+        delta_merge_into(t, b3, "event_id", epoch_id="2", compact_depth=99)
         got = {
             r["url"]: r["score"] for r in read_current(t).collect()
         }
@@ -725,37 +723,38 @@ def test_type_widening_through_delta_paths(spark, tmp_table_dir):
 
 
 def test_row_lww_guard_on_unfolded_mor_patch_table(spark, tmp_table_dir):
-    """ADVICE round-3 (medium): a merge-on-read patch table BEFORE its
-    first fold carries only _set_cols in its snapshot schema (_cvers is
-    materialised by resolution) — the guard must still reject whole-row
-    LWW merges, which would null every cell a winning patch didn't name."""
-    from aus_land_data_etl_spark.lake.merge import delta_merge_into, merge_into
+    """A merge-on-read patch table BEFORE its first fold carries only
+    _set_cols in its snapshot schema (_cvers is materialised by
+    resolution).  A full-image batch on it must still resolve per cell
+    through either merge — a whole-row LWW would null every cell a
+    winning patch didn't name — and land its own cells at its own
+    version."""
+    import os
 
-    t = _mk_table(spark, tmp_table_dir)
-    delta_merge_patch_into(
-        t,
-        _events(
-            spark,
-            [
-                ("a", 10, "e1", "insert", "x", "en", 1.0, None),
-                ("a", 20, "e2", "patch", None, "fr", None, ["lang"]),
-            ],
-        ),
-        "event_id",
-        epoch_id="0",
-        compact_depth=99,  # never fold: snapshot schema has no _cvers yet
-    )
-    names = {f.name for f in t.snapshot().schema.fields}
-    assert SET_COLS in names and CELL_VERS not in names  # the trap setup
-    full = _events(
-        spark, [("a", 30, "e3", "update", "y", "de", 2.0, None)]
-    ).drop(SET_COLS)
-    with pytest.raises(ValueError, match="merge_patch_into"):
-        merge_into(t, full, "event_id", epoch_id="1")
-    with pytest.raises(ValueError, match="merge_patch_into"):
-        delta_merge_into(t, full, "event_id", epoch_id="1")
-    # state unharmed
-    assert _state(t)["a"] == ("x", "fr", 1.0, TS(20))
+    for name, merge in (("cow", merge_into), ("mor", delta_merge_into)):
+        t = _mk_table(spark, os.path.join(tmp_table_dir, name))
+        delta_merge_into(
+            t,
+            _events(
+                spark,
+                [
+                    ("a", 10, "e1", "insert", "x", "en", 1.0, None),
+                    ("a", 20, "e2", "patch", None, "fr", None, ["lang"]),
+                ],
+            ),
+            "event_id",
+            epoch_id="0",
+            compact_depth=99,  # never fold: snapshot schema has no _cvers yet
+        )
+        names = {f.name for f in t.snapshot().schema.fields}
+        assert SET_COLS in names and CELL_VERS not in names  # the trap setup
+        full = _events(
+            spark, [("a", 30, "e3", "update", "y", "de", 2.0, None)]
+        ).drop(SET_COLS)
+        merge(t, full, "event_id", epoch_id="1")
+        assert _state(t)["a"] == ("y", "de", 2.0, TS(30)), name
+        assert SET_COLS in t.read().columns, name
+        assert CELL_VERS in t.read_resolved().columns, name
 
 
 @pytest.mark.parametrize("entry", ["cow", "mor"])
@@ -767,7 +766,7 @@ def test_null_set_cols_patch_is_empty_set_not_full_image(
     prepare_patch_batch's coalesce) must determine NOTHING — previously
     it became a full image and nulled every unnamed cell."""
     t = _mk_table(spark, tmp_table_dir)
-    merge = merge_patch_into if entry == "cow" else delta_merge_patch_into
+    merge = merge_into if entry == "cow" else delta_merge_into
     merge(
         t,
         _events(spark, [("a", 10, "e1", "insert", "x", "en", 1.0, None)]),

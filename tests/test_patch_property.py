@@ -119,8 +119,8 @@ def test_resolve_cells_matches_model_randomized(spark):
 
 def test_resolve_cells_split_invariance_randomized(spark):
     """Two-stage reduction over a random split == one-shot reduction,
-    including the carried _cvers maps (the associativity the MoR folds
-    and salted pre-reduces rely on)."""
+    including the carried _cvers maps (the associativity MoR folds and
+    merges over any batch split rely on)."""
     rng = random.Random(77)
     cases = {cid: _gen_case(rng, cid) for cid in range(40)}
     rows = []

@@ -8,7 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from aus_land_data_etl_spark.cdc.apply import apply_patch_batch, create_pages_table
+from aus_land_data_etl_spark.cdc.apply import apply_batch, create_pages_table
 from aus_land_data_etl_spark.lake.merge import read_current
 from aus_land_data_etl_spark.plans.driver_queries import patch_events_as_wal
 from aus_land_data_etl_spark.streaming.runner import (
@@ -45,7 +45,7 @@ def test_patch_stream_resumes_from_checkpoint(spark, tmp_table_dir):
     want_tbl = create_pages_table(
         spark, os.path.join(tmp_table_dir, "tbl2"), n_buckets=8
     )
-    apply_patch_batch(want_tbl, changes, epoch=0)
+    apply_batch(want_tbl, changes, epoch=0)
     got = {
         r["url"]: (r["text"], r["lang"], r["event_id"])
         for r in read_current(table).collect()
@@ -95,7 +95,7 @@ def test_html_patch_reextracts_text_cell_only(spark, tmp_table_dir):
         "source_partition int, source_offset long, source_file string, "
         "source_pos long",
     )
-    apply_patch_batch(table, batch, epoch=0)
+    apply_batch(table, batch, epoch=0)
     r = read_current(table).collect()[0]
     assert r["text"] == "new body"  # derived cell follows the html winner
     assert r["lang"] == "en"  # unnamed cell keeps the insert's value
@@ -164,11 +164,11 @@ def test_patch_append_is_o_patch_bytes(spark, tmp_table_dir):
 
     t_patch = create_pages_table(spark, os.path.join(tmp_table_dir, "p"), 4)
     t_full = create_pages_table(spark, os.path.join(tmp_table_dir, "f"), 4)
-    apply_patch_batch(t_patch, base, epoch=0, compact_depth=99)
-    apply_patch_batch(t_full, base, epoch=0, compact_depth=99)
+    apply_batch(t_patch, base, epoch=0, compact_depth=99)
+    apply_batch(t_full, base, epoch=0, compact_depth=99)
     vp0, vf0 = t_patch.current_version(), t_full.current_version()
-    apply_patch_batch(t_patch, mk_next("patch", ["lang"]), epoch=1, compact_depth=99)
-    apply_patch_batch(t_full, mk_next("update", None), epoch=1, compact_depth=99)
+    apply_batch(t_patch, mk_next("patch", ["lang"]), epoch=1, compact_depth=99)
+    apply_batch(t_full, mk_next("update", None), epoch=1, compact_depth=99)
     pb = delta_bytes(t_patch, vp0, t_patch.current_version())
     fb = delta_bytes(t_full, vf0, t_full.current_version())
     # same logical change (lang en→fr on every row); the patch epoch must

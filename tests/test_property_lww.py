@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from aus_land_data_etl_spark.cdc.apply import (
     apply_batch,
-    apply_patch_batch,
     create_pages_table,
 )
 from aus_land_data_etl_spark.cdc.events import EVENT_SCHEMA, PATCH_EVENT_SCHEMA
@@ -354,12 +353,12 @@ def _run_patch_log(spark, tmp_path_factory, log):
     vers_after, applied = [], []
     for i in range(n_batches):
         batch = df.filter(F.pmod(F.xxhash64("event_id"), F.lit(n_batches)) == i)
-        _apply_in_mode(table, apply_patch_batch, batch, i, modes[i], wal)
+        _apply_in_mode(table, apply_batch, batch, i, modes[i], wal)
         applied.append((batch, i, modes[i]))
         vers_after.append(table.current_version())
         if maint[i] == "rollback":
             _rollback_and_replay(
-                table, vers_after, applied, i, apply_patch_batch, wal
+                table, vers_after, applied, i, apply_batch, wal
             )
         else:
             _do_maint(table, maint[i])
@@ -501,7 +500,7 @@ def test_regression_cow_patch_preserves_live_delta_schema(
     still live.  Re-reads imposed the new schema on the old delta file,
     ``_set_cols`` vanished, and the determine-nothing patch replayed as
     a full image — final row ``(35, e000, NULL, NULL)`` instead of
-    ``(35, e000, 'e001 body', 'en')``.  merge_patch_into now aligns the
+    ``(35, e000, 'e001 body', 'en')``.  merge_into now aligns the
     committed schema to the pre-merge snapshot's (fold_deltas' guard),
     and commit_buckets refuses to drop columns live deltas carry."""
     _run_patch_log(spark, tmp_path_factory, _R4_COW_AFTER_MOR_LOG)

@@ -248,7 +248,11 @@ def test_incremental_zorder_auto_selects_deep_stacks(spark, tmp_path_factory):
     byte-identical, and the resolved state is preserved."""
     import datetime as dt
 
-    from aus_land_data_etl_spark.lake.merge import delta_merge_into, read_current
+    from aus_land_data_etl_spark.lake.merge import (
+        cluster_fanout_deltas,
+        delta_merge_into,
+        read_current,
+    )
     from aus_land_data_etl_spark.lake.table import bucket_expr
 
     schema = T.StructType(
@@ -289,15 +293,14 @@ def test_incremental_zorder_auto_selects_deep_stacks(spark, tmp_path_factory):
         properties={"stats_cols": ["warc_ts", "text"]},
     )
     t.overwrite(batch(hot + cold, 1, "base").drop("op"))
+    # per-bucket delta layers: each fanout append clustered before the next
     for ts in (2, 3, 4):
         delta_merge_into(
-            t, batch(hot, ts, f"hot-{ts}"), "event_id",
-            compact_depth=100, fanout=False,
+            t, batch(hot, ts, f"hot-{ts}"), "event_id", compact_depth=100
         )
-    delta_merge_into(
-        t, batch(cold, 5, "cold-5"), "event_id",
-        compact_depth=100, fanout=False,
-    )
+        cluster_fanout_deltas(t, "event_id")
+    delta_merge_into(t, batch(cold, 5, "cold-5"), "event_id", compact_depth=100)
+    cluster_fanout_deltas(t, "event_id")
     snap = t.snapshot()
     cold_base = list(snap.bucket_files[str(cold_b)])
     cold_deltas = list(snap.delta_files[str(cold_b)])
@@ -344,7 +347,11 @@ def test_read_current_pushes_predicates_when_folded(spark, tmp_path, grid):
     """Serving reads over the LIVE view file-skip on z-ordered dimensions
     once folded; with live deltas the predicates are ignored (pruning
     does not commute with LWW) but the filtered result stays identical."""
-    from aus_land_data_etl_spark.lake.merge import delta_merge_into, read_current
+    from aus_land_data_etl_spark.lake.merge import (
+        cluster_fanout_deltas,
+        delta_merge_into,
+        read_current,
+    )
 
     t = _make_table(spark, tmp_path, grid)
     cluster_zorder(t, ["a", "b"], bits=5, files_per_bucket=4, tiebreak_col="k")
@@ -362,7 +369,8 @@ def test_read_current_pushes_predicates_when_folded(spark, tmp_path, grid):
     upd = spark.createDataFrame(
         [("k00000", 10, 11)], SCHEMA
     ).withColumn("op", F.lit("update"))
-    delta_merge_into(t, upd, "k", compact_depth=100, fanout=False)
+    delta_merge_into(t, upd, "k", compact_depth=100)
+    cluster_fanout_deltas(t, "k")
     got = sorted(
         (r.k, r.a, r.b)
         for r in read_current(t, tiebreak_col="k", predicates=preds)
