@@ -143,5 +143,5 @@ def coverage_summary(table: LakeTable, version: int | None = None) -> DataFrame:
         reapplied_exact.alias("reapplied_offsets"),
         (F.col("_missing") == 0).alias("contiguous"),
         F.col("_missing").alias("missing_offsets"),
-        wm_map.getItem(ns_key).alias("watermark"),
+        wm_map[ns_key].alias("watermark"),
     )

@@ -175,7 +175,6 @@ def merge_into(
         schema=new_schema,
         manifest_rows=manifest_rows,
         epoch_id=epoch_id,
-        pre_bucketed=True,
         wal_offsets=wal_offsets,
         properties_update=properties_update,
         computed_from=snap,
@@ -347,7 +346,6 @@ def fold_deltas(table: LakeTable, tiebreak_col: str, min_stack: int = 1) -> int:
         resolved,
         touched_buckets=touched,
         schema=resolved.drop(BUCKET_COL).schema,
-        pre_bucketed=True,
         computed_from=snap,
     )
 
@@ -413,7 +411,7 @@ def append_if_absent(table: LakeTable, rows: DataFrame) -> int:
         BUCKET_COL, bucket_expr(key, snap.n_buckets)
     )
     return table.commit_buckets(
-        merged, touched_buckets=touched, pre_bucketed=True, computed_from=snap
+        merged, touched_buckets=touched, computed_from=snap
     )
 
 

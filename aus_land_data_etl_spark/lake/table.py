@@ -56,7 +56,7 @@ import tempfile
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field, fields as fields_of, replace
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -120,10 +120,14 @@ MANIFEST_SCHEMA = T.StructType(
 )
 
 
+#: Descriptor-race attempts per commit before ``ConflictError``.
+COMMIT_ATTEMPTS = 6
+
+
 class ConflictError(RuntimeError):
     """A commit lost the optimistic-concurrency race in a way that cannot
-    be rebased automatically (bucket layout changed mid-commit, or the
-    descriptor race was lost more than ``max_retries`` times)."""
+    be rebased automatically (what the operation read changed under it,
+    or the descriptor race was lost ``COMMIT_ATTEMPTS`` times in a row)."""
 
 
 def _union_schema(base: T.StructType, added: T.StructType) -> T.StructType:
@@ -333,15 +337,9 @@ def spark_hash_value(key, dtype: T.DataType, session_tz: str | None = None) -> i
             # fits a long: Spark hashes the unscaled long
             return murmur3_long(unscaled)
         # wider: Spark hashes BigInteger.toByteArray (minimal-length
-        # big-endian two's complement, ≥1 byte)
-        length = 1
-        while True:
-            try:
-                b = unscaled.to_bytes(length, "big", signed=True)
-                break
-            except OverflowError:
-                length += 1
-        return murmur3_bytes(b)
+        # big-endian two's complement, ≥1 byte: Java's bitLength + sign bit)
+        n_bits = (unscaled if unscaled >= 0 else ~unscaled).bit_length()
+        return murmur3_bytes(unscaled.to_bytes(n_bits // 8 + 1, "big", signed=True))
     if isinstance(dtype, T.BooleanType):
         return murmur3_int(1 if key else 0)
     if isinstance(dtype, T.DoubleType):
@@ -983,92 +981,165 @@ class LakeTable:
             f.write(str(snap.version))
         os.rename(tmp, self._version_ptr)  # atomic pointer swap
 
-    def _write_bucket_data(
+    def _commit(
+        self,
+        base: Snapshot,
+        update: Callable[[Snapshot, int], Snapshot],
+        inputs_unchanged: Callable[[Snapshot], bool] = lambda cur: True,
+        conflict: str = "",
+        stats: dict[str, dict[str, Any]] | None = None,
+        manifest_rows: list[dict[str, Any]] | None = None,
+        epoch_id: str | list[str] | None = None,
+        wal_offsets: bool = False,
+    ) -> int:
+        """The one commit loop (Iceberg's optimistic concurrency): every
+        descriptor write after ``create`` is an update of a base snapshot.
+
+        ``base`` is the snapshot the operation planned against;
+        ``update(current, version)`` builds the new state from a current
+        snapshot and is re-applied on every attempt;
+        ``inputs_unchanged(current)`` says whether what the operation read
+        still holds in ``current``.  Each attempt reads the pointer and
+        writes ``current + 1`` — never ``base.version + 1``: retention may
+        have deleted that descriptor, and an O_EXCL on a freed number
+        would swing ``_VERSION`` backwards.  It returns the current
+        version if the batch is already applied (exactly-once), raises
+        ``ConflictError`` with ``conflict`` if the inputs moved, and
+        otherwise finishes the descriptor here: epoch state advanced,
+        lineage rows (and any legacy inline rows) spilled to manifest
+        files, zonemaps carried for files that stay live plus ``stats``
+        for the new ones.  A lost descriptor race rebases on the
+        winner, at most ``COMMIT_ATTEMPTS`` times.
+        """
+        wm_rows = manifest_rows if wal_offsets else None
+        cur = base
+        for _attempt in range(COMMIT_ATTEMPTS):
+            at = self.current_version()
+            if at != cur.version:
+                cur = self.snapshot(at)
+            if cur.is_applied(epoch_id, wm_rows):
+                return cur.version  # this very batch is already in
+            if not inputs_unchanged(cur):
+                raise ConflictError(
+                    f"{conflict} (read snapshot v{base.version}, "
+                    f"current v{cur.version})"
+                )
+            version = cur.version + 1
+            out = update(cur, version)
+            recent, watermarks, pending = out.advanced_epoch_state(epoch_id, wm_rows)
+            live = {
+                f
+                for fs in (*out.bucket_files.values(), *out.delta_files.values())
+                for f in fs
+            }
+            zonemaps = {**out.file_stats, **(stats or {})}
+            out = replace(
+                out,
+                version=version,
+                recent_epochs=recent,
+                watermarks=watermarks,
+                pending_ranges=pending,
+                manifest_files=self._next_manifest_files(out, version, manifest_rows),
+                legacy_manifests=[],
+                file_stats={k: v for k, v in zonemaps.items() if k in live},
+            )
+            try:
+                self._write_snapshot(out)
+                return version
+            except FileExistsError:
+                continue  # a racer took the number: rebase on its state
+        raise ConflictError(
+            f"lost the descriptor race {COMMIT_ATTEMPTS} times in a row"
+        )
+
+    def _write_data(
         self,
         df: DataFrame,
-        snapshot_version: int,
-        pre_bucketed: bool = False,
+        base: Snapshot,
         cluster_key: Column | None = None,
         files_per_bucket: int = 1,
         cluster_n_buckets: int | None = None,
-    ) -> dict[str, list[str]]:
-        """Write df (must carry BUCKET_COL) partitioned by bucket; return
-        the relative file list per bucket.
+    ) -> tuple[dict[str, list[str]], dict[str, dict[str, Any]]]:
+        """Write one commit's data files under ``base``'s table
+        properties; return ``({bucket: rel paths}, zonemaps)``.
 
-        Rows are clustered by bucket before the partitioned write so each
-        bucket lands in exactly one task → one file per bucket, instead of
-        (tasks × buckets) small files.  This caps file count at n_buckets
-        per snapshot, keeping the next epoch's bucket-pruned read (and the
-        driver-side listing) O(buckets), not O(buckets × cores × epochs).
-        ``pre_bucketed=True`` asserts the caller already key-partitioned
-        the frame (bucket_expr matches Spark's hash partitioning), so no
-        extra shuffle is added here.
+        A frame carrying BUCKET_COL is written partitioned by bucket, with
+        no shuffle here: every caller hands over a frame whose partition i
+        holds bucket i (``repartition(n_buckets, key)`` — ``bucket_expr``
+        is Spark's own hash partitioning), so each bucket lands in one
+        task → one file per bucket, keeping the next epoch's bucket-pruned
+        read (and the driver-side listing) O(buckets).  A frame without
+        BUCKET_COL is a fanout delta, returned under ``"*"``: whatever
+        partitioning the batch has goes straight to parquet, clustering
+        deferred to the next fold (the Iceberg fanout-writer tradeoff:
+        zero write-side exchange, coarser read pruning until compaction).
+
+        Zonemaps are footer-swept for the ``stats_cols`` table property.
+        (On a real cluster the write tasks would emit these — parquet
+        writers hold the stats in memory; the driver-side footer sweep is
+        the local-FS stand-in with identical output.)
         """
+        from aus_land_data_etl_spark.lake.stats import collect_file_stats
+
         # commit-unique suffix: two optimistic committers may attempt the
         # same version number; same-named dirs + mode("overwrite") would
         # let the racer clobber the loser's files mid-commit.  Snapshots
         # reference files by path, so the name only needs uniqueness.
         rel_dir = os.path.join(
-            "data", f"s{snapshot_version:08d}-{uuid.uuid4().hex[:8]}"
+            "data", f"s{base.version + 1:08d}-{uuid.uuid4().hex[:8]}"
         )
         out_dir = os.path.join(self.root, rel_dir)
-        props = self.snapshot().properties
-        if cluster_key is not None:
-            # z-ordered rewrite (lake/zorder.py): range-partition on
-            # (bucket, z-key) so each task holds one contiguous z-range of
-            # one bucket → files_per_bucket tight-zonemap files per bucket.
-            # Supersedes both the hash repartition and the sort_cols sort
-            # (the z-key IS the clustering order).  cluster_n_buckets: how
-            # many distinct buckets df actually covers (a bucket-scoped
-            # incremental rewrite passes len(touched), not the table width).
-            snap = self.snapshot()
-            width = cluster_n_buckets or snap.n_buckets
-            df = df.repartitionByRange(
-                max(1, width * files_per_bucket),
-                F.col(BUCKET_COL),
-                cluster_key,
-            ).sortWithinPartitions(F.col(BUCKET_COL), cluster_key)
-        elif not pre_bucketed:
-            snap = self.snapshot()
-            df = df.repartition(snap.n_buckets, F.col(BUCKET_COL))
-        # sorted writes: clustering rows by the sort columns inside each
-        # bucket file tightens the zonemaps recorded below (and parquet's
-        # own page stats + RLE).  Per-partition sort — no extra exchange,
-        # so the pre_bucketed no-shuffle guarantee holds.
-        sort_cols = [c for c in (props.get("sort_cols") or []) if c in df.columns]
-        if sort_cols and cluster_key is None:
-            df = df.sortWithinPartitions(BUCKET_COL, *sort_cols)
-        writer = df.write.mode("overwrite")
-        for c in props.get("bloom_cols") or []:
-            # parquet-level bloom filters (point-lookup row-group skipping
-            # on the key column; readers use them automatically)
-            writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        with _stats_bearing_timestamps(self.spark):
-            writer.partitionBy(BUCKET_COL).parquet(out_dir)
-        bucket_files: dict[str, list[str]] = {}
-        for entry in sorted(os.listdir(out_dir)):
-            if not entry.startswith(f"{BUCKET_COL}="):
-                continue
-            b = str(int(entry.split("=", 1)[1]))
-            bdir = os.path.join(out_dir, entry)
-            bucket_files[b] = sorted(
-                os.path.join(rel_dir, entry, f)
-                for f in os.listdir(bdir)
+        props = base.properties
+        files: dict[str, list[str]] = {}
+        if BUCKET_COL not in df.columns:
+            with _stats_bearing_timestamps(self.spark):
+                df.write.mode("overwrite").parquet(out_dir)
+            files["*"] = sorted(
+                os.path.join(rel_dir, f)
+                for f in os.listdir(out_dir)
                 if f.endswith(".parquet")
             )
-        self._stage_stats([f for fs in bucket_files.values() for f in fs])
-        return bucket_files
-
-    def _stage_stats(self, rel_paths: list[str]) -> None:
-        """Footer-sweep freshly written files for the ``stats_cols``
-        zonemaps; the commit paths fold the staged entries into the new
-        snapshot via ``_next_file_stats``.  No-op when the table property
-        is unset.  (On a real cluster the write tasks would emit these —
-        parquet writers hold the stats in memory; the driver-side footer
-        sweep is the local-FS stand-in with identical output.)"""
-        from aus_land_data_etl_spark.lake.stats import collect_file_stats
-
-        cols = list(self.snapshot().properties.get("stats_cols") or [])
+        else:
+            if cluster_key is not None:
+                # z-ordered rewrite (lake/zorder.py): range-partition on
+                # (bucket, z-key) so each task holds one contiguous z-range
+                # of one bucket → files_per_bucket tight-zonemap files per
+                # bucket.  Supersedes the sort_cols sort (the z-key IS the
+                # clustering order).  cluster_n_buckets: how many distinct
+                # buckets df actually covers (a bucket-scoped incremental
+                # rewrite passes len(touched), not the table width).
+                df = df.repartitionByRange(
+                    max(1, (cluster_n_buckets or base.n_buckets) * files_per_bucket),
+                    F.col(BUCKET_COL),
+                    cluster_key,
+                ).sortWithinPartitions(F.col(BUCKET_COL), cluster_key)
+            else:
+                # sorted writes: clustering rows by the sort columns inside
+                # each bucket file tightens the zonemaps recorded below (and
+                # parquet's own page stats + RLE).  Per-partition sort — no
+                # extra exchange.
+                sort_cols = [
+                    c for c in (props.get("sort_cols") or []) if c in df.columns
+                ]
+                if sort_cols:
+                    df = df.sortWithinPartitions(BUCKET_COL, *sort_cols)
+            writer = df.write.mode("overwrite")
+            for c in props.get("bloom_cols") or []:
+                # parquet-level bloom filters (point-lookup row-group
+                # skipping on the key column; readers use them automatically)
+                writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
+            with _stats_bearing_timestamps(self.spark):
+                writer.partitionBy(BUCKET_COL).parquet(out_dir)
+            for entry in sorted(os.listdir(out_dir)):
+                if not entry.startswith(f"{BUCKET_COL}="):
+                    continue
+                bdir = os.path.join(out_dir, entry)
+                files[str(int(entry.split("=", 1)[1]))] = sorted(
+                    os.path.join(rel_dir, entry, f)
+                    for f in os.listdir(bdir)
+                    if f.endswith(".parquet")
+                )
+        cols = list(props.get("stats_cols") or [])
         if cols and "is_deleted" not in cols:
             # stats_cols is the opt-in for metadata answers; the exact
             # per-file ``dels`` (metadata-only COUNT under tombstone
@@ -1076,24 +1147,8 @@ class LakeTable:
             # the cost of one RLE boolean column on cache-hot files —
             # callers shouldn't need to know the internal column name.
             cols.append("is_deleted")
-        self._staged_stats = (
-            collect_file_stats(self.root, rel_paths, cols) if cols else {}
-        )
-
-    def _next_file_stats(
-        self,
-        snap: "Snapshot",
-        bucket_files: dict[str, list[str]],
-        delta_files: dict[str, list[str]],
-    ) -> dict[str, dict[str, Any]]:
-        """Zonemaps for the new snapshot: carry entries for files that
-        stay live, add the staged entries for files just written."""
-        staged = getattr(self, "_staged_stats", {})
-        live = {f for fs in bucket_files.values() for f in fs}
-        live.update(f for fs in delta_files.values() for f in fs)
-        out = {k: v for k, v in snap.file_stats.items() if k in live}
-        out.update((k, v) for k, v in staged.items() if k in live)
-        return out
+        paths = [f for fs in files.values() for f in fs]
+        return files, (collect_file_stats(self.root, paths, cols) if cols else {})
 
     def set_properties(self, updates: dict[str, Any]) -> int:
         """Metadata-only property commit (``ALTER TABLE SET TBLPROPERTIES``
@@ -1104,23 +1159,19 @@ class LakeTable:
         data commit; files written before keep whatever zonemaps they
         had (``plan_scan`` keeps files without recorded stats, so the
         change is always pruning-sound).  A ``None`` value removes the
-        property."""
-        snap = self.snapshot()
-        props = dict(snap.properties)
-        for k, v in updates.items():
-            if v is None:
-                props.pop(k, None)
-            else:
-                props[k] = v
-        new_version = snap.version + 1
-        new_snap = replace(
-            snap,
-            version=new_version,
-            properties=props,
-            manifest_files=self._next_manifest_files(snap, new_version, None),
-        )
-        self._write_snapshot(new_snap)
-        return new_version
+        property.  A lost race re-applies the updates to the winner's
+        properties."""
+
+        def update(cur: Snapshot, _version: int) -> Snapshot:
+            props = dict(cur.properties)
+            for k, v in updates.items():
+                if v is None:
+                    props.pop(k, None)
+                else:
+                    props[k] = v
+            return replace(cur, properties=props)
+
+        return self._commit(self.snapshot(), update)
 
     # -- named refs (tags) + rollback --------------------------------------
 
@@ -1187,24 +1238,25 @@ class LakeTable:
         across the rollback commit like any other interval.
 
         A branch handle rolls back only to its own version numbers: tags
-        name MAIN versions, so a tag ref raises ``ValueError`` there."""
+        name MAIN versions, so a tag ref raises ``ValueError`` there.
+        A commit landing meanwhile raises ``ConflictError``: the rollback
+        would silently undo it too."""
         if self.branch_name is not None and not isinstance(ref, int):
             raise ValueError(
                 "tags name MAIN versions; roll a branch back by version number"
             )
         target = self.resolve_ref(ref)
-        cur = self.snapshot()
-        if target == cur.version:
-            return cur.version
+        base = self.snapshot()
+        if target == base.version:
+            return base.version
         old = self.snapshot(target)  # FileNotFoundError if expired
-        new_version = cur.version + 1
-        new_snap = replace(
-            old,
-            version=new_version,
-            manifest_files=self._next_manifest_files(old, new_version, None),
+        return self._commit(
+            base,
+            lambda cur, _version: old,
+            lambda cur: cur.version == base.version,
+            f"a commit landed before the rollback to v{target}; re-check "
+            "what to roll back",
         )
-        self._write_snapshot(new_snap)
-        return new_version
 
     # -- branches (write-audit-publish) ------------------------------------
 
@@ -1236,20 +1288,16 @@ class LakeTable:
         br = LakeTable(self.spark, self.root, branch_name=name)
         if os.path.exists(br._version_ptr):
             raise FileExistsError(f"branch {name!r} exists")
-        br_snap = replace(
-            snap,
-            properties={
-                **snap.properties,
-                "_branch_name": name,
-                "_branch_fork_main": fork_v,
-            },
+        br._write_snapshot(
+            replace(
+                snap,
+                properties={
+                    **snap.properties,
+                    "_branch_name": name,
+                    "_branch_fork_main": fork_v,
+                },
+            )
         )
-        with open(br._snap_path(fork_v), "x") as f:
-            f.write(br_snap.to_json())
-        fd, tmp = tempfile.mkstemp(dir=self._snap_dir)
-        with os.fdopen(fd, "w") as f:
-            f.write(str(fork_v))
-        os.rename(tmp, br._version_ptr)
         return br
 
     def open_branch(self, name: str) -> "LakeTable":
@@ -1291,37 +1339,22 @@ class LakeTable:
         br = self.open_branch(name)
         br_snap = br.snapshot()
         fork_main = br_snap.properties.get("_branch_fork_main")
-        cur = self.snapshot()
-        if cur.version != fork_main:
-            raise ConflictError(
-                f"main at v{cur.version} advanced past the branch fork "
-                f"point v{fork_main}; re-fork and replay"
-            )
         props = {
             k: v
             for k, v in br_snap.properties.items()
             if not k.startswith("_branch_")
         }
-        new_version = cur.version + 1
-        new_snap = replace(
-            br_snap,
-            version=new_version,
-            properties=props,
-            manifest_files=self._next_manifest_files(br_snap, new_version, None),
+        # a conflict (main moved before or during the publish) KEEPS the
+        # branch: the staged work re-forks and replays
+        version = self._commit(
+            self.snapshot(),
+            lambda cur, _version: replace(br_snap, properties=props),
+            lambda cur: cur.version == fork_main,
+            f"main advanced past the branch fork point v{fork_main}; "
+            "re-fork and replay",
         )
-        try:
-            self._write_snapshot(new_snap)
-        except FileExistsError as e:
-            # lost the physical descriptor race (another publish or a
-            # direct commit landed between our read and write): surface
-            # the same semantic conflict as the fork-point check, and
-            # KEEP the branch — the staged work re-forks and replays
-            raise ConflictError(
-                f"main advanced to v{new_version} during publish of "
-                f"{name!r}; re-fork and replay"
-            ) from e
         self.drop_branch(name)
-        return new_version
+        return version
 
     def _branch_descriptor_files(self) -> list[str]:
         """On-disk descriptors of LIVE branches (dropped branches leave
@@ -1345,32 +1378,29 @@ class LakeTable:
         ``cluster_key`` (see ``lake/zorder.py``) switches the write layout
         from one-file-per-hash-bucket to ``files_per_bucket`` contiguous
         cluster-key ranges per bucket — multi-dimensional zonemap
-        clustering without giving up key bucketing."""
-        snap = self.snapshot()
-        new_version = snap.version + 1
-        with_bucket = df.withColumn(BUCKET_COL, bucket_expr(snap.key_col, snap.n_buckets))
-        bucket_files = self._write_bucket_data(
-            with_bucket,
-            new_version,
+        clustering without giving up key bucketing.  A commit landing
+        meanwhile raises ``ConflictError`` (this rewrite would drop it)."""
+        base = self.snapshot()
+        if cluster_key is None:
+            df = df.repartition(base.n_buckets, F.col(base.key_col))
+        files, stats = self._write_data(
+            df.withColumn(BUCKET_COL, bucket_expr(base.key_col, base.n_buckets)),
+            base,
             cluster_key=cluster_key,
             files_per_bucket=files_per_bucket,
         )
-        new_snap = Snapshot(
-            version=new_version,
-            schema_json=json.dumps(df.schema.jsonValue()),
-            n_buckets=snap.n_buckets,
-            key_col=snap.key_col,
-            version_col=snap.version_col,
-            bucket_files=bucket_files,
-            recent_epochs=snap.recent_epochs,
-            watermarks=snap.watermarks,
-            pending_ranges=snap.pending_ranges,
-            properties=snap.properties,
-            manifest_files=self._next_manifest_files(snap, new_version, None),
-            file_stats=self._next_file_stats(snap, bucket_files, {}),
+        return self._commit(
+            base,
+            lambda cur, _version: replace(
+                cur,
+                schema_json=json.dumps(df.schema.jsonValue()),
+                bucket_files=files,
+                delta_files={},
+            ),
+            lambda cur: cur.version == base.version,
+            "a commit landed during the overwrite; re-run it",
+            stats=stats,
         )
-        self._write_snapshot(new_snap)
-        return new_version
 
     def rebucket(self, n_buckets: int, tiebreak_col: str = "event_id") -> int:
         """Bucket-count evolution (Iceberg partition-spec evolution analog).
@@ -1390,10 +1420,11 @@ class LakeTable:
         non-multiple ratios or expired intermediate descriptors.
         Watermarks, the epoch window and lineage manifests
         carry over untouched — replay protection survives the rewrite.
+        A commit landing meanwhile raises ``ConflictError``.
         """
-        snap = self.snapshot()
-        if n_buckets == snap.n_buckets:
-            return snap.version
+        base = self.snapshot()
+        if n_buckets == base.n_buckets:
+            return base.version
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         # read the SAME snapshot the carried-over epoch state comes from:
@@ -1401,12 +1432,12 @@ class LakeTable:
         # landing between snapshot() and here would make the rewritten
         # data inconsistent with recent_epochs/watermarks/manifests
         resolved = self.read_resolved(
-            version=snap.version, tiebreak_col=tiebreak_col
+            version=base.version, tiebreak_col=tiebreak_col
         )
         # patch tables: resolution consumes _set_cols and materialises the
         # _cvers cell-version map — the committed schema must follow, or
         # the imposed-schema read would silently drop per-cell versions
-        out_schema = _union_schema(snap.schema, resolved.schema)
+        out_schema = _union_schema(base.schema, resolved.schema)
         resolved = resolved.select(
             *[
                 F.col(f.name)
@@ -1415,40 +1446,34 @@ class LakeTable:
                 for f in out_schema.fields
             ]
         )
-        new_version = snap.version + 1
-        df = resolved.repartition(n_buckets, F.col(snap.key_col)).withColumn(
-            BUCKET_COL, bucket_expr(snap.key_col, n_buckets)
+        df = resolved.repartition(n_buckets, F.col(base.key_col)).withColumn(
+            BUCKET_COL, bucket_expr(base.key_col, n_buckets)
         )
-        bucket_files = self._write_bucket_data(
-            df, new_version, pre_bucketed=True
-        )
-        properties = dict(snap.properties)
+        files, stats = self._write_data(df, base)
+        properties = dict(base.properties)
         properties.pop("delta_epochs", None)  # deltas folded by the rewrite
-        new_snap = Snapshot(
-            version=new_version,
-            schema_json=json.dumps(out_schema.jsonValue()),
-            n_buckets=n_buckets,
-            key_col=snap.key_col,
-            version_col=snap.version_col,
-            bucket_files=bucket_files,
-            recent_epochs=snap.recent_epochs,
-            watermarks=snap.watermarks,
-            pending_ranges=snap.pending_ranges,
-            properties=properties,
-            manifest_files=self._next_manifest_files(snap, new_version, None),
-            file_stats=self._next_file_stats(snap, bucket_files, {}),
+        return self._commit(
+            base,
+            lambda cur, _version: replace(
+                cur,
+                schema_json=json.dumps(out_schema.jsonValue()),
+                n_buckets=n_buckets,
+                bucket_files=files,
+                delta_files={},
+                properties=properties,
+            ),
+            lambda cur: cur.version == base.version,
+            "a commit landed during the rebucket; re-run it",
+            stats=stats,
         )
-        self._write_snapshot(new_snap)
-        return new_version
 
     def commit_buckets(
         self,
-        replaced: dict[int, DataFrame] | DataFrame,
+        replaced: DataFrame,
         touched_buckets: list[int],
         schema: T.StructType | None = None,
         manifest_rows: list[dict[str, Any]] | None = None,
         epoch_id: str | list[str] | None = None,
-        pre_bucketed: bool = False,
         wal_offsets: bool = False,
         properties_update: dict[str, Any] | None = None,
         cluster_key: Column | None = None,
@@ -1457,25 +1482,25 @@ class LakeTable:
     ) -> int:
         """Copy-on-write commit: replace data for ``touched_buckets`` only.
 
+        ``replaced`` is one DataFrame carrying BUCKET_COL covering exactly
+        the touched buckets, its partition i holding bucket i (see
+        ``_write_data``).  Untouched buckets keep their existing files —
+        this is what bounds MERGE write amplification at scale (SURVEY §7.4.7).
+
         ``computed_from`` — the snapshot the caller's rewrite actually
-        READ.  When the planning phase runs long Spark jobs between the
-        read and this commit (the incremental z-order's quantile pass, a
-        fold's resolution), a concurrent delta landing in a touched
-        bucket during that window would otherwise be popped from
-        ``delta_files`` without its rows ever having been read — a
-        silent lost update with no descriptor race to trip on.  Passing
-        the planning snapshot makes the input check cover the whole
-        read→commit span: the commit raises ``ConflictError`` if the
-        touched inputs moved, exactly as it does on a descriptor race.
+        READ (default: the current one).  When the planning phase runs
+        long Spark jobs between the read and this commit (the incremental
+        z-order's quantile pass, a fold's resolution), a concurrent delta
+        landing in a touched bucket during that window would otherwise be
+        popped from ``delta_files`` without its rows ever having been
+        read — a silent lost update with no descriptor race to trip on.
+        Passing the planning snapshot makes the input check cover the
+        whole read→commit span.
 
         ``cluster_key`` switches the touched buckets' write layout to
         ``files_per_bucket`` contiguous cluster-key ranges per bucket
         (the incremental z-order path, ``lake/zorder.py
         cluster_zorder_buckets``); untouched buckets keep their files.
-
-        ``replaced`` is one DataFrame carrying BUCKET_COL covering exactly
-        the touched buckets.  Untouched buckets keep their existing files —
-        this is what bounds MERGE write amplification at scale (SURVEY §7.4.7).
 
         ``wal_offsets=True`` declares the source's offsets unique and
         monotone per partition (the binlog/WAL contract) — only then do the
@@ -1483,63 +1508,45 @@ class LakeTable:
         ad-hoc batch source may reuse offsets, which would make the
         watermark unsound.
 
-        Optimistic concurrency: on losing the descriptor race, the commit
-        rebases IFF the winner did not touch this rewrite's inputs — the
-        touched buckets' base+delta file lists, the fanout ("*") delta set
-        (it spans every bucket) and the bucket count must all be unchanged
-        from the snapshot the rewrite was computed against.  Anything else
-        (e.g. a delta append to a bucket we are rewriting: our rewrite
-        would silently supersede rows it never read) raises
+        Optimistic concurrency: the commit rebases IFF the winner did not
+        touch this rewrite's inputs — the touched buckets' base+delta file
+        lists, the fanout ("*") delta set (it spans every bucket) and the
+        bucket count must all be unchanged from ``computed_from``.
+        Anything else (e.g. a delta append to a bucket we are rewriting:
+        our rewrite would silently supersede rows it never read) raises
         ``ConflictError`` and the caller re-runs the merge.
         """
-        snap = self.snapshot()
-        orig = computed_from if computed_from is not None else snap
-        wm_rows = manifest_rows if wal_offsets else None
-        if snap.is_applied(epoch_id, wm_rows):
-            return snap.version  # exactly-once: batch already applied
-
-        def _same_inputs(cur) -> bool:
-            return (
-                cur.n_buckets == orig.n_buckets
-                and cur.delta_files.get("*", []) == orig.delta_files.get("*", [])
-                and all(
-                    cur.bucket_files.get(str(b), [])
-                    == orig.bucket_files.get(str(b), [])
-                    and cur.delta_files.get(str(b), [])
-                    == orig.delta_files.get(str(b), [])
-                    for b in touched_buckets
-                )
-            )
-
-        if computed_from is not None and not _same_inputs(snap):
-            raise ConflictError(
-                "a commit landed in the touched buckets between the "
-                f"rewrite's read snapshot (v{orig.version}) and this commit "
-                f"(current v{snap.version}); re-run against the fresh snapshot"
-            )
-        new_version = snap.version + 1
-        assert isinstance(replaced, DataFrame)
-        new_files = self._write_bucket_data(
+        base = computed_from if computed_from is not None else self.snapshot()
+        touched = {str(b) for b in touched_buckets}
+        new_files, stats = self._write_data(
             replaced,
-            new_version,
-            pre_bucketed,
+            base,
             cluster_key=cluster_key,
             files_per_bucket=files_per_bucket,
-            cluster_n_buckets=len(touched_buckets) if cluster_key is not None else None,
+            cluster_n_buckets=len(touched_buckets),
         )
-        while True:
-            bucket_files = dict(snap.bucket_files)
-            delta_files = dict(snap.delta_files)
-            for b in touched_buckets:
-                bucket_files.pop(str(b), None)
-                # base rewrite supersedes any deltas layered on these buckets
-                delta_files.pop(str(b), None)
-            # fanout deltas span every bucket — superseded only by a full fold
-            if set(touched_buckets) >= set(range(snap.n_buckets)):
-                delta_files.pop("*", None)
-            # A touched bucket that ends up empty (all rows deleted) simply has
-            # no files in the new snapshot.
+
+        def inputs_unchanged(cur: Snapshot) -> bool:
+            return cur.n_buckets == base.n_buckets and all(
+                cur.bucket_files.get(b, []) == base.bucket_files.get(b, [])
+                and cur.delta_files.get(b, []) == base.delta_files.get(b, [])
+                for b in (*touched, "*")
+            )
+
+        def update(cur: Snapshot, _version: int) -> Snapshot:
+            # base rewrite supersedes any deltas layered on these buckets;
+            # a touched bucket that ends up empty (all rows deleted) simply
+            # has no files in the new snapshot
+            bucket_files = {
+                b: fs for b, fs in cur.bucket_files.items() if b not in touched
+            }
             bucket_files.update(new_files)
+            delta_files = {
+                b: fs for b, fs in cur.delta_files.items() if b not in touched
+            }
+            # fanout deltas span every bucket — superseded only by a full fold
+            if set(touched_buckets) >= set(range(cur.n_buckets)):
+                delta_files.pop("*", None)
             if schema is not None and delta_files:
                 # Surviving delta layers (fanout "*" spans every bucket;
                 # untouched buckets keep their stacks) are re-read under
@@ -1556,9 +1563,7 @@ class LakeTable:
                 # rewrite-before-drop discipline as Iceberg), which is
                 # the safe default for an operation this engine never
                 # performs implicitly.
-                dropped = {f.name for f in snap.schema.fields} - {
-                    f.name for f in schema.fields
-                }
+                dropped = set(cur.schema.names) - set(schema.names)
                 if dropped:
                     raise ValueError(
                         f"commit_buckets would drop column(s) {sorted(dropped)} "
@@ -1566,66 +1571,32 @@ class LakeTable:
                         "delta file(s) still carry them; fold deltas first or "
                         "align the committed schema to the prior snapshot's"
                     )
-            properties = dict(snap.properties)
+            properties = dict(cur.properties)
             if not delta_files:
                 properties.pop("delta_epochs", None)
             elif "*" not in delta_files:
                 # leveled state: depth is the deepest remaining per-bucket stack
                 properties["delta_epochs"] = max(len(fs) for fs in delta_files.values())
             properties.update(properties_update or {})
-            recent, watermarks, pending = snap.advanced_epoch_state(epoch_id, wm_rows)
-            new_snap = Snapshot(
-                version=new_version,
-                schema_json=json.dumps(schema.jsonValue()) if schema is not None else snap.schema_json,
-                n_buckets=snap.n_buckets,
-                key_col=snap.key_col,
-                version_col=snap.version_col,
+            return replace(
+                cur,
+                schema_json=json.dumps(schema.jsonValue()) if schema is not None else cur.schema_json,
                 bucket_files=bucket_files,
-                recent_epochs=recent,
-                watermarks=watermarks,
-                pending_ranges=pending,
-                properties=properties,
                 delta_files=delta_files,
-                manifest_files=self._next_manifest_files(snap, new_version, manifest_rows),
-                file_stats=self._next_file_stats(snap, bucket_files, delta_files),
+                properties=properties,
             )
-            try:
-                self._write_snapshot(new_snap)
-                return new_version
-            except FileExistsError:
-                snap = self.snapshot()
-                if snap.is_applied(epoch_id, wm_rows):
-                    return snap.version  # racer applied this very batch
-                if not _same_inputs(snap):
-                    raise ConflictError(
-                        "concurrent commit touched the buckets this rewrite "
-                        f"read ({touched_buckets}); re-run the merge against "
-                        "the fresh snapshot"
-                    ) from None
-                new_version = snap.version + 1
 
-    def _write_fanout_data(self, df: DataFrame, snapshot_version: int) -> list[str]:
-        """Write delta rows with NO shuffle: whatever partitioning the
-        batch already has goes straight to parquet.  Clustering by bucket
-        is deferred to the next fold (the Iceberg fanout-writer tradeoff:
-        zero write-side exchange, coarser read pruning until compaction)."""
-        # commit-unique suffix: two optimistic committers may attempt the
-        # same version number; same-named dirs + mode("overwrite") would
-        # let the racer clobber the loser's files mid-commit.  Snapshots
-        # reference files by path, so the name only needs uniqueness.
-        rel_dir = os.path.join(
-            "data", f"s{snapshot_version:08d}-{uuid.uuid4().hex[:8]}"
+        return self._commit(
+            base,
+            update,
+            inputs_unchanged,
+            f"a commit landed in the touched buckets {sorted(touched_buckets)} "
+            "since the rewrite's read snapshot; re-run against the fresh snapshot",
+            stats=stats,
+            manifest_rows=manifest_rows,
+            epoch_id=epoch_id,
+            wal_offsets=wal_offsets,
         )
-        out_dir = os.path.join(self.root, rel_dir)
-        with _stats_bearing_timestamps(self.spark):
-            df.write.mode("overwrite").parquet(out_dir)
-        files = sorted(
-            os.path.join(rel_dir, f)
-            for f in os.listdir(out_dir)
-            if f.endswith(".parquet")
-        )
-        self._stage_stats(files)
-        return files
 
     def commit_delta(
         self,
@@ -1634,10 +1605,9 @@ class LakeTable:
         manifest_rows: list[dict[str, Any]] | None = None,
         epoch_id: str | list[str] | None = None,
         wal_offsets: bool = False,
-        max_retries: int = 5,
     ) -> int:
         """Merge-on-read commit: append the batch's rows as fanout (``"*"``)
-        delta files, with no shuffle (``_write_fanout_data``).
+        delta files, with no shuffle (``_write_data``).
 
         O(batch) per epoch — the base is never read or rewritten here;
         readers resolve LWW over base ∪ deltas and ``fold_deltas``
@@ -1645,67 +1615,45 @@ class LakeTable:
         stream (SURVEY §7.4.7): CoW rewrites O(table) per epoch, MoR
         defers that to compaction across many epochs.
 
-        Optimistic concurrency (Iceberg's commit loop): the data files are
-        written ONCE; if another committer wins the descriptor O_EXCL race,
-        the metadata — delta lists, epoch window, watermarks, schema — is
-        rebuilt against the *fresh* snapshot and the commit retried (a
-        delta append conflicts with nothing: it only adds files, and
-        fanout files carry no bucket layout, so even a racing rebucket
-        rebases cleanly).  The racer's state is preserved, including a
-        schema it may have evolved (field-name union).  If the racer
-        already applied this same batch, the exactly-once guard returns
-        its version instead.
+        Optimistic concurrency: the data files are written ONCE; a lost
+        descriptor race always rebases (a delta append conflicts with
+        nothing: it only adds files, and fanout files carry no bucket
+        layout, so even a racing rebucket rebases cleanly).  The racer's
+        state is preserved, including a schema it may have evolved
+        (field-name union).  If the racer already applied this same batch,
+        the exactly-once guard returns its version instead.
         """
-        snap = self.snapshot()
-        wm_rows = manifest_rows if wal_offsets else None
-        if snap.is_applied(epoch_id, wm_rows):
-            return snap.version
-        new_version = snap.version + 1
-        # data is written once, under the first attempted version's dir;
-        # later attempts re-reference the same files (snapshot file lists
-        # are plain relative paths — expire reclaims by reference, not by
-        # directory name, so a renumbered commit keeps them live)
-        written = self._write_fanout_data(winners, new_version)
-        for _attempt in range(max_retries + 1):
-            delta_files = {k: list(v) for k, v in snap.delta_files.items()}
-            delta_files.setdefault("*", []).extend(written)
-            properties = dict(snap.properties)
+        base = self.snapshot()
+        # data is written once; every attempt re-references the same files
+        # (snapshot file lists are plain relative paths — expire reclaims
+        # by reference, not by directory name, so a renumbered commit keeps
+        # them live)
+        written, stats = self._write_data(winners, base)
+
+        def update(cur: Snapshot, _version: int) -> Snapshot:
+            delta_files = {k: list(v) for k, v in cur.delta_files.items()}
+            delta_files.setdefault("*", []).extend(written["*"])
+            properties = dict(cur.properties)
             # each fanout commit deepens the unclustered "*" backlog by one
             properties["delta_epochs"] = int(properties.get("delta_epochs", 0)) + 1
-            recent, watermarks, pending = snap.advanced_epoch_state(epoch_id, wm_rows)
-            if schema is not None:
-                schema_json = json.dumps(
-                    _union_schema(snap.schema, schema).jsonValue()
-                )
-            else:
-                schema_json = snap.schema_json
-            new_snap = Snapshot(
-                version=new_version,
-                schema_json=schema_json,
-                n_buckets=snap.n_buckets,
-                key_col=snap.key_col,
-                version_col=snap.version_col,
-                bucket_files=snap.bucket_files,
-                recent_epochs=recent,
-                watermarks=watermarks,
-                pending_ranges=pending,
-                properties=properties,
-                delta_files=delta_files,
-                manifest_files=self._next_manifest_files(snap, new_version, manifest_rows),
-                file_stats=self._next_file_stats(
-                    snap, snap.bucket_files, delta_files
+            return replace(
+                cur,
+                schema_json=(
+                    json.dumps(_union_schema(cur.schema, schema).jsonValue())
+                    if schema is not None
+                    else cur.schema_json
                 ),
+                delta_files=delta_files,
+                properties=properties,
             )
-            try:
-                self._write_snapshot(new_snap)
-                return new_version
-            except FileExistsError:
-                snap = self.snapshot()  # racer won: rebase on its state
-                if snap.is_applied(epoch_id, wm_rows):
-                    return snap.version  # racer applied this very batch
-                new_version = snap.version + 1
-        raise ConflictError(
-            f"lost the descriptor race {max_retries + 1} times in a row"
+
+        return self._commit(
+            base,
+            update,
+            stats=stats,
+            manifest_rows=manifest_rows,
+            epoch_id=epoch_id,
+            wal_offsets=wal_offsets,
         )
 
     def commit_clustered_deltas(
@@ -1728,68 +1676,52 @@ class LakeTable:
         if the winner folded or clustered the same files itself, our
         layers re-add rows the table already holds, which LWW resolution
         absorbs (identical versions — wasted bytes until the next fold,
-        never wrong results).
+        never wrong results).  Only a changed bucket count conflicts.
         """
-        snap = self.snapshot()
-        if "*" not in snap.delta_files:
-            return snap.version
-        input_star = set(snap.delta_files["*"])
-        new_version = snap.version + 1
-        new_files = self._write_bucket_data(clustered, new_version, pre_bucketed=True)
-        # a cell-resolving clustering (patch tables) materialises _cvers
-        # for the first time — evolve the schema like commit_delta does
-        schema_json = (
-            json.dumps(_union_schema(snap.schema, schema).jsonValue())
-            if schema is not None
-            else snap.schema_json
-        )
-        for _attempt in range(6):
+        base = self.snapshot()
+        if "*" not in base.delta_files:
+            return base.version
+        input_star = set(base.delta_files["*"])
+        new_files, stats = self._write_data(clustered, base)
+
+        def update(cur: Snapshot, _version: int) -> Snapshot:
             delta_files = {
-                k: list(v) for k, v in snap.delta_files.items() if k != "*"
+                k: list(v) for k, v in cur.delta_files.items() if k != "*"
             }
             leftover_star = [
-                f for f in snap.delta_files.get("*", []) if f not in input_star
+                f for f in cur.delta_files.get("*", []) if f not in input_star
             ]
             if leftover_star:
                 delta_files["*"] = leftover_star
             for b, fs in new_files.items():
                 delta_files.setdefault(b, []).extend(fs)
-            properties = dict(snap.properties)
+            # a cell-resolving clustering (patch tables) materialises _cvers
+            # for the first time — evolve the schema like commit_delta does
+            schema_json = (
+                json.dumps(_union_schema(cur.schema, schema).jsonValue())
+                if schema is not None
+                else cur.schema_json
+            )
             # depth of the deepest stack; leftover fanout files each came
             # from one commit, so they count as that much backlog
-            properties["delta_epochs"] = max(
+            depth = max(
                 [len(leftover_star)]
                 + [len(fs) for b, fs in delta_files.items() if b != "*"]
             )
-            new_snap = Snapshot(
-                version=new_version,
+            return replace(
+                cur,
                 schema_json=schema_json,
-                n_buckets=snap.n_buckets,
-                key_col=snap.key_col,
-                version_col=snap.version_col,
-                bucket_files=snap.bucket_files,
-                recent_epochs=snap.recent_epochs,
-                watermarks=snap.watermarks,
-                pending_ranges=snap.pending_ranges,
-                properties=properties,
                 delta_files=delta_files,
-                manifest_files=self._next_manifest_files(snap, new_version, None),
-                file_stats=self._next_file_stats(
-                    snap, snap.bucket_files, delta_files
-                ),
+                properties={**cur.properties, "delta_epochs": depth},
             )
-            try:
-                self._write_snapshot(new_snap)
-                return new_version
-            except FileExistsError:
-                snap = self.snapshot()
-                if snap.n_buckets != new_snap.n_buckets:
-                    raise ConflictError(
-                        "bucket layout changed mid-clustering; re-run "
-                        "against the new layout"
-                    ) from None
-                new_version = snap.version + 1
-        raise ConflictError("lost the descriptor race 6 times in a row")
+
+        return self._commit(
+            base,
+            update,
+            lambda cur: cur.n_buckets == base.n_buckets,
+            "bucket layout changed mid-clustering; re-run against the new layout",
+            stats=stats,
+        )
 
     def max_delta_depth(self) -> int:
         """Number of unfolded delta commits (compaction trigger)."""
@@ -1847,28 +1779,24 @@ class LakeTable:
         reference them for versioned lineage reads — and are reclaimed by
         ``expire_snapshots`` once no retained descriptor references them.
         """
-        snap = self.snapshot()
-        if len(snap.manifest_files) <= 1 and not snap.legacy_manifests:
+        base = self.snapshot()
+        if len(base.manifest_files) <= 1 and not base.legacy_manifests:
             return 0
-        new_version = snap.version + 1
-        files = list(snap.manifest_files)
-        if snap.legacy_manifests:
-            name = self._write_manifest_rows(new_version, snap.legacy_manifests)
-            if name:
-                files.append(name)
-        merged = (
-            self._merge_manifest_files(new_version, files)
-            if len(files) > 1
-            else files[0]
-        )
-        new_snap = replace(
-            snap,
-            version=new_version,
-            manifest_files=[merged],
-            legacy_manifests=[],
-        )
-        self._write_snapshot(new_snap)
-        return len(files) - 1
+        merged_away = 0
+
+        def update(cur: Snapshot, version: int) -> Snapshot:
+            # a lost race re-merges the winner's (fresh) list
+            nonlocal merged_away
+            files = list(cur.manifest_files)
+            if cur.legacy_manifests:
+                files.append(self._write_manifest_rows(version, cur.legacy_manifests))
+            merged_away = max(0, len(files) - 1)
+            if len(files) > 1:
+                files = [self._merge_manifest_files(version, files)]
+            return replace(cur, manifest_files=files, legacy_manifests=[])
+
+        self._commit(base, update)
+        return merged_away
 
     def _require_main(self, what: str) -> None:
         """Retention sweeps compute reachability from this handle's

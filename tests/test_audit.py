@@ -47,6 +47,7 @@ def test_offset_gaps_clean_stream_empty(spark, tmp_table_dir):
         assert c["watermark"] == c["last_offset"]
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_coverage_summary_reports_gap_and_watermark(spark, table_with_skipped_batch):
     t = table_with_skipped_batch
     cov = coverage_summary(t).collect()

@@ -1,7 +1,8 @@
-"""Optimistic-concurrency commit loop (Iceberg-style): a delta commit
-that loses the descriptor O_EXCL race rebases its metadata on the
-winner's snapshot and retries — data files are written once and
-re-referenced, the racer's state (epochs, watermarks, schema) survives.
+"""Optimistic-concurrency commit loop (Iceberg-style): a commit that
+loses the descriptor O_EXCL race rebases on the winner's snapshot iff
+its inputs are unchanged there, else raises ConflictError — data files
+are written once and re-referenced, the racer's state (epochs,
+watermarks, schema) survives.
 """
 
 from __future__ import annotations
@@ -190,7 +191,6 @@ def test_commit_refuses_stale_planning_snapshot(spark, tmp_table_dir):
         t.commit_buckets(
             resolved,
             touched_buckets=[0, 1],
-            pre_bucketed=True,
             computed_from=planning_snap,
         )
     # nothing lost: the late row still wins
@@ -239,3 +239,108 @@ def test_publish_race_one_wins_one_conflicts(spark, tmp_table_dir, monkeypatch):
     apply_batch(b1b, _seg(events, 1), epoch=1)
     t1.publish_branch("p1")
     assert set(t1.snapshot().recent_epochs) >= {"0", "1", "2"}
+
+
+@pytest.mark.parametrize("op", ["set_properties", "compact_manifests"])
+def test_metadata_commit_rebases_after_losing_race(
+    spark, tmp_table_dir, monkeypatch, op
+):
+    """Commits whose update re-applies to any fresh state rebase on a
+    lost race: the racer's batch AND the update both land."""
+    events = generate_events(spark, 300, seed=35).localCheckpoint(eager=True)
+    t1 = create_pages_table(spark, tmp_table_dir, n_buckets=4)
+    for e in (0, 1):
+        apply_batch(t1, _seg(events, e), epoch=e, compact_depth=99)
+    t2 = LakeTable(spark, tmp_table_dir)
+    v = t1.current_version()
+
+    _race_once(
+        monkeypatch,
+        t1,
+        lambda: apply_batch(t2, _seg(events, 2), epoch=2, compact_depth=99),
+    )
+    if op == "set_properties":
+        t1.set_properties({"owner": "etl"})
+    else:
+        assert t1.compact_manifests() == 2  # the fresh list: 3 files → 1
+
+    snap = t1.snapshot()
+    assert snap.version == v + 2
+    assert "2" in snap.recent_epochs  # the racer's commit survived
+    if op == "set_properties":
+        assert snap.properties["owner"] == "etl"
+    else:
+        assert len(snap.manifest_files) == 1
+    epochs = {r["epoch"] for r in t1.manifest_df().select("epoch").collect()}
+    assert epochs == {0, 1, 2}
+
+
+@pytest.mark.parametrize("op", ["overwrite", "rebucket", "rollback_to"])
+def test_whole_table_rewrite_refuses_after_losing_race(
+    spark, tmp_table_dir, monkeypatch, op
+):
+    """Operations that read the whole base version raise ConflictError
+    on a lost race — rebasing would silently drop the racer's commit —
+    and the racer's version stays current and intact."""
+    events = generate_events(spark, 300, seed=36).localCheckpoint(eager=True)
+    t1 = create_pages_table(spark, tmp_table_dir, n_buckets=4)
+    apply_batch(t1, _seg(events, 0), epoch=0, compact_depth=99)
+    v_first = t1.current_version()
+    apply_batch(t1, _seg(events, 1), epoch=1, compact_depth=99)
+    t2 = LakeTable(spark, tmp_table_dir)
+    racer_v = t1.current_version() + 1
+    before = sorted(
+        map(tuple, read_current(t1).select("url", "event_id").collect())
+    )
+    run = {
+        "overwrite": lambda: t1.overwrite(t1.read_resolved()),
+        "rebucket": lambda: t1.rebucket(8),
+        "rollback_to": lambda: t1.rollback_to(v_first),
+    }[op]
+
+    _race_once(monkeypatch, t1, lambda: t2.set_properties({"owner": "etl"}))
+    with pytest.raises(ConflictError, match="read snapshot"):
+        run()
+
+    snap = t1.snapshot()
+    assert t1.current_version() == racer_v
+    assert snap.properties["owner"] == "etl" and snap.n_buckets == 4
+    assert sorted(
+        map(tuple, read_current(t1).select("url", "event_id").collect())
+    ) == before
+
+
+def test_commit_never_reuses_an_expired_version_number(spark, tmp_table_dir):
+    """A rewrite planned at v1 commits after the table advanced and
+    retention deleted the descriptors just above v1: the commit must
+    land at current + 1 (or raise ConflictError) — never re-create a
+    freed number, which would swing _VERSION backwards."""
+    import os
+
+    from aus_land_data_etl_spark.lake.table import BUCKET_COL, bucket_expr
+
+    events = generate_events(spark, 300, seed=37).localCheckpoint(eager=True)
+    t = create_pages_table(spark, tmp_table_dir, n_buckets=4)
+    apply_batch(t, events, epoch=0, mode="cow")
+    plan = t.snapshot()
+    rewrite = (
+        t.read(version=plan.version, buckets=[0])
+        .repartition(4, "url")
+        .withColumn(BUCKET_COL, bucket_expr("url", 4))
+    )
+    for i in range(3):  # commits that leave bucket 0 untouched
+        t.set_properties({"tick": i})
+    current = t.current_version()
+    t.expire_snapshots(keep_last=2)
+    assert not os.path.exists(t._snap_path(plan.version + 1))
+
+    try:
+        v = t.commit_buckets(rewrite, touched_buckets=[0], computed_from=plan)
+    except ConflictError:
+        v = None
+    if v is None:
+        assert t.current_version() == current
+    else:
+        assert v == current + 1 and t.current_version() == current + 1
+    assert not os.path.exists(t._snap_path(plan.version + 1))
+    assert t.snapshot().properties["tick"] == 2

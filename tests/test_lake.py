@@ -98,7 +98,7 @@ def test_partial_data_write_without_commit_is_invisible(spark, tmp_table_dir):
     orphan = _mkdf(spark, 3, "ghost").withColumn(
         BUCKET_COL, bucket_expr("url", 4)
     )
-    t._write_bucket_data(orphan, snapshot_version=v + 7, pre_bucketed=False)
+    t._write_data(orphan.repartition(4, "url"), t.snapshot())
 
     assert t.current_version() == v
     assert t.read().filter(F.col("text").startswith("ghost")).count() == 0
@@ -109,10 +109,11 @@ def test_partial_data_write_without_commit_is_invisible(spark, tmp_table_dir):
 
 
 def test_losing_concurrent_committer_fails_cleanly(spark, tmp_table_dir):
-    """Two handles committing onto the same snapshot: the loser of the
-    O_EXCL race raises instead of overwriting the winner's snapshot, and
-    the table stays at the winner's state (optimistic concurrency —
-    a retry loop on a fresh snapshot is the caller's policy)."""
+    """Two handles committing onto the same snapshot: the descriptor
+    write of the O_EXCL race's loser raises instead of overwriting the
+    winner's snapshot, and the table stays at the winner's state.  This
+    is the primitive under the commit loop, which turns the raise into a
+    rebase or a ``ConflictError`` (tests/test_concurrency.py)."""
     import pytest as _pytest
 
     from aus_land_data_etl_spark.lake.table import Snapshot

@@ -194,6 +194,50 @@ def test_snapshot_migrates_legacy_descriptor():
     assert again.legacy_manifests == rows
 
 
+@pytest.mark.parametrize("op", ["set_properties", "rollback_to", "commit_delta"])
+def test_legacy_lineage_rows_spill_exactly_once(spark, tmp_table_dir, op):
+    """A pre-manifest-spill descriptor's inline lineage rows are spilled
+    by the next commit of ANY kind and then dropped from the descriptor:
+    later commits must not spill them again (each re-spill would add one
+    more copy of every legacy row to ``manifest_df``)."""
+    import json as _json
+
+    t = create_pages_table(spark, tmp_table_dir, n_buckets=4)
+    t.set_properties({"owner": "etl"})
+    legacy_v = t.current_version()
+    row = {
+        "epoch": 7,
+        "source_partition": 0,
+        "source_file": "wal-0",
+        "start_offset": 0,
+        "end_offset": 9,
+        "row_count": 10,
+        "checksum": "abc",
+    }
+    path = t._snap_path(legacy_v)
+    with open(path) as f:
+        d = _json.load(f)
+    d.pop("manifest_files")
+    d.pop("legacy_manifests")
+    d["manifests"] = [row]
+    with open(path, "w") as f:
+        _json.dump(d, f)
+
+    if op == "set_properties":
+        t.set_properties({"x": 1})
+    elif op == "rollback_to":
+        t.set_properties({"x": 1})
+        t.rollback_to(legacy_v)
+    else:
+        events = generate_events(spark, 100, seed=38)
+        apply_batch(t, events, epoch=0)
+    assert t.snapshot().legacy_manifests == []
+    assert t.manifest_df().filter(F.col("epoch") == 7).count() == 1
+    # and a further commit does not spill them again
+    t.set_properties({"y": 2})
+    assert t.manifest_df().filter(F.col("epoch") == 7).count() == 1
+
+
 def test_out_of_order_commits_backfill_watermark(
     spark, tmp_table_dir, monkeypatch
 ):
