@@ -34,4 +34,9 @@ reference ETL pipeline (AKST/Aus-Land-Data-ETL), re-expressed Spark-first:
                    the reference's ordered 21-SQL-script derive plan).
 """
 
+from aus_land_data_etl_spark._zipguard import install_in_worker as _install_in_worker
+
 __version__ = "0.1.0"
+
+# Inside a PySpark worker task only: stop each task re-reading pyspark.zip.
+_install_in_worker()

@@ -18,6 +18,20 @@ from pyspark.sql import SparkSession
 DEFAULT_BUCKETS = 32
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 32g.
+
+    The local-mode driver JVM holds every executor's heap, and a heap
+    sized past the host's memory gets the JVM killed by the kernel's OOM
+    killer once it grows (it did at 32g on a 16 GB host).
+    """
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):
+        return "32g"
+    return f"{min(32 << 10, max(1 << 10, phys // 2 >> 20))}m"
+
+
 def get_spark(
     app_name: str = "aus_land_data_etl_spark",
     cores: int | str | None = None,
@@ -51,7 +65,10 @@ def get_spark(
         # Deterministic cross-engine comparison (DuckDB oracle is UTC-naive).
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         # Parquet writer defaults: target sane file sizes at scale.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # zstd over snappy: identical write wall-clock on the html-heavy
