@@ -3,16 +3,18 @@
 Layout::
 
     <root>/
-      _snapshots/v00000001.json   # immutable snapshot descriptors
-      _snapshots/_VERSION         # atomic pointer to current version
+      _snapshots/v00000001.json         # immutable main descriptors
+      _snapshots/b-<name>-v00000001.json  # branch <name>'s descriptors
       data/s00000001-<hex>/bucket_id=N/*.parquet   # commit-unique dirs
 
 A snapshot descriptor records: table schema (json), bucket count, key /
 version columns, the file list per bucket, the accumulated per-epoch
 lineage manifests, and the set of committed epoch ids (the exactly-once
-guard).  Commit = write descriptor with O_EXCL then atomically swap the
-``_VERSION`` pointer — the same optimistic single-pointer protocol Iceberg
-uses (metadata.json + version-hint).
+guard).  The descriptor IS the commit (the Delta log's put-if-absent
+rule): it is staged in a temp file and published with ``os.link``, which
+is atomic and fails if the name exists, so a descriptor is either
+complete or absent, and the highest number on disk is current.  There is
+no separate pointer to swap, so no crash can leave one behind.
 
 Scale design (10^10 events / 10^5 epochs): the descriptor is **O(1) in
 epoch count** —
@@ -50,7 +52,9 @@ lib/tasks/schema/partition.py:26-85); the epoch guard mirrors its
 from __future__ import annotations
 
 import json
+import logging
 import os
+import re
 import shutil
 import tempfile
 import uuid
@@ -122,6 +126,32 @@ MANIFEST_SCHEMA = T.StructType(
 
 #: Descriptor-race attempts per commit before ``ConflictError``.
 COMMIT_ATTEMPTS = 6
+
+log = logging.getLogger(__name__)
+
+#: The one parser of descriptor names: ``v<N>.json`` is main's,
+#: ``b-<name>-v<N>.json`` branch ``<name>``'s (the name may itself hold
+#: ``-v``; the anchored version suffix keeps the split exact).
+_DESCRIPTOR = re.compile(r"v(\d{8})\.json|b-(.+)-v(\d{8})\.json")
+
+
+def _descriptors(snap_dir: str) -> dict[str | None, list[int]]:
+    """Descriptors on disk: ``{branch name, or None for main: ascending
+    versions}``.  Anything else under ``_snapshots/`` (staging tmp files,
+    pointer files of older tables) is not a descriptor."""
+    out: dict[str | None, list[int]] = {}
+    for f in os.listdir(snap_dir) if os.path.isdir(snap_dir) else []:
+        m = _DESCRIPTOR.fullmatch(f)
+        if m:
+            out.setdefault(m[2], []).append(int(m[1] or m[3]))
+    for vs in out.values():
+        vs.sort()
+    return out
+
+
+def _descriptor_name(branch: str | None, version: int) -> str:
+    prefix = "v" if branch is None else f"b-{branch}-v"
+    return f"{prefix}{version:08d}.json"
 
 
 class ConflictError(RuntimeError):
@@ -523,12 +553,12 @@ class LakeTable:
     """Handle to a snapshot-committed bucketed parquet table.
 
     ``branch_name`` selects a BRANCH namespace (write-audit-publish,
-    Iceberg branch analog): descriptors ``b-<name>-v<N>.json`` and
-    pointer ``_VERSION-b-<name>`` instead of ``v<N>.json``/``_VERSION``.
-    Every commit path (MERGE, deltas, rebucket, z-order, properties) is
-    parametrised through these two path helpers, so a branch handle
-    stages ordinary exactly-once commits — data files land under the
-    shared ``data/`` (uuid-suffixed dirs, no collisions) but are
+    Iceberg branch analog): descriptors ``b-<name>-v<N>.json`` instead
+    of ``v<N>.json``; a handle's current version is its highest
+    descriptor number.  Every commit path (MERGE, deltas, rebucket,
+    z-order, properties) goes through ``_snap_path``/``_versions``, so a
+    branch handle stages ordinary exactly-once commits — data files land
+    under the shared ``data/`` (uuid-suffixed dirs, no collisions) but are
     referenced only by branch descriptors until ``publish_branch``
     fast-forwards main.  Readers of main never see staged state.
     """
@@ -546,17 +576,11 @@ class LakeTable:
         return os.path.join(self.root, "_snapshots")
 
     def _snap_path(self, version: int) -> str:
-        if self.branch_name is not None:
-            return os.path.join(
-                self._snap_dir, f"b-{self.branch_name}-v{version:08d}.json"
-            )
-        return os.path.join(self._snap_dir, f"v{version:08d}.json")
+        return os.path.join(self._snap_dir, _descriptor_name(self.branch_name, version))
 
-    @property
-    def _version_ptr(self) -> str:
-        if self.branch_name is not None:
-            return os.path.join(self._snap_dir, f"_VERSION-b-{self.branch_name}")
-        return os.path.join(self._snap_dir, "_VERSION")
+    def _versions(self) -> list[int]:
+        """This handle's descriptor numbers on disk, ascending."""
+        return _descriptors(self._snap_dir).get(self.branch_name, [])
 
     @property
     def _manifest_dir(self) -> str:
@@ -570,7 +594,7 @@ class LakeTable:
 
         Written BEFORE the descriptor, but visible only once a committed
         descriptor lists the name (``Snapshot.manifest_files``): a crash —
-        or a committer that loses the descriptor's O_EXCL race — leaves an
+        or a committer that loses the descriptor race — leaves an
         unreferenced orphan, never a clobbered file (two committers racing
         on the same version write two different names; the loser's retry
         spills its rows again under its new version).  Rows are O(source
@@ -648,14 +672,15 @@ class LakeTable:
         O(tail), not O(total history), and the descriptor's list stays
         O(MANIFEST_TAIL_MAX + total/TIER) — effectively flat in epochs.
         """
-        files = list(snap.manifest_files)
-        if snap.legacy_manifests:
-            name = self._write_manifest_rows(new_version, snap.legacy_manifests)
-            if name:
-                files.append(name)
-        name = self._write_manifest_rows(new_version, rows or [])
-        if name:
-            files.append(name)
+        spilled = [
+            n
+            for n in (
+                self._write_manifest_rows(new_version, snap.legacy_manifests),
+                self._write_manifest_rows(new_version, rows or []),
+            )
+            if n
+        ]
+        files = list(snap.manifest_files) + spilled
         if len(files) <= MANIFEST_TAIL_MAX:
             return files
         small = [
@@ -667,6 +692,10 @@ class LakeTable:
         if len(small) <= 1:
             return files
         merged = self._merge_manifest_files(new_version, small)
+        for n in set(spilled) & set(small):
+            # merged before any descriptor listed it: no snapshot (and so
+            # no expire_snapshots) would ever reference it
+            os.remove(os.path.join(self._manifest_dir, n))
         return [n for n in files if n not in set(small)] + [merged]
 
     # -- lifecycle ---------------------------------------------------------
@@ -697,11 +726,15 @@ class LakeTable:
 
     @classmethod
     def exists(cls, root: str) -> bool:
-        return os.path.exists(os.path.join(root, "_snapshots", "_VERSION"))
+        return None in _descriptors(os.path.join(root, "_snapshots"))
 
     def current_version(self) -> int:
-        with open(self._version_ptr) as f:
-            return int(f.read().strip())
+        versions = self._versions()
+        if not versions:
+            raise FileNotFoundError(
+                f"no descriptor {self._snap_path(0)[:-14]}<N>.json"
+            )
+        return versions[-1]
 
     def snapshot(self, version: int | str | None = None) -> Snapshot:
         """Descriptor at a version — or at a TAG name: every time-travel
@@ -971,15 +1004,18 @@ class LakeTable:
 
     # -- write -------------------------------------------------------------
     def _write_snapshot(self, snap: Snapshot) -> None:
-        path = self._snap_path(snap.version)
-        # O_EXCL: concurrent committers race on the version file, loser
-        # retries on a fresh snapshot (optimistic concurrency, Iceberg-style).
-        with open(path, "x") as f:
-            f.write(snap.to_json())
+        """Commit ``snap``: stage it in a temp file, then link it to its
+        version's name.  The link is atomic and raises
+        ``FileExistsError`` if a racer took the number, so a descriptor
+        is complete or absent and a failure at any step leaves the table
+        at its previous version."""
         fd, tmp = tempfile.mkstemp(dir=self._snap_dir)
-        with os.fdopen(fd, "w") as f:
-            f.write(str(snap.version))
-        os.rename(tmp, self._version_ptr)  # atomic pointer swap
+        try:
+            with os.fdopen(fd, "w") as f:
+                f.write(snap.to_json())
+            os.link(tmp, self._snap_path(snap.version))
+        finally:
+            os.unlink(tmp)
 
     def _commit(
         self,
@@ -999,10 +1035,9 @@ class LakeTable:
         ``update(current, version)`` builds the new state from a current
         snapshot and is re-applied on every attempt;
         ``inputs_unchanged(current)`` says whether what the operation read
-        still holds in ``current``.  Each attempt reads the pointer and
-        writes ``current + 1`` — never ``base.version + 1``: retention may
-        have deleted that descriptor, and an O_EXCL on a freed number
-        would swing ``_VERSION`` backwards.  It returns the current
+        still holds in ``current``.  Each attempt lists the current
+        version and writes ``current + 1``, never ``base.version + 1``:
+        the table may have moved on since ``base``.  It returns the current
         version if the batch is already applied (exactly-once), raises
         ``ConflictError`` with ``conflict`` if the inputs moved, and
         otherwise finishes the descriptor here: epoch state advanced,
@@ -1018,12 +1053,18 @@ class LakeTable:
             if at != cur.version:
                 cur = self.snapshot(at)
             if cur.is_applied(epoch_id, wm_rows):
+                log.debug(
+                    "%s: batch %s already applied at v%d",
+                    self.root, epoch_id, cur.version,
+                )
                 return cur.version  # this very batch is already in
             if not inputs_unchanged(cur):
-                raise ConflictError(
+                msg = (
                     f"{conflict} (read snapshot v{base.version}, "
                     f"current v{cur.version})"
                 )
+                log.warning("%s: commit refused: %s", self.root, msg)
+                raise ConflictError(msg)
             version = cur.version + 1
             out = update(cur, version)
             recent, watermarks, pending = out.advanced_epoch_state(epoch_id, wm_rows)
@@ -1047,10 +1088,11 @@ class LakeTable:
                 self._write_snapshot(out)
                 return version
             except FileExistsError:
-                continue  # a racer took the number: rebase on its state
-        raise ConflictError(
-            f"lost the descriptor race {COMMIT_ATTEMPTS} times in a row"
-        )
+                # a racer took the number: rebase on its state
+                log.debug("lost the race for %s; rebasing", self._snap_path(version))
+        msg = f"lost the descriptor race {COMMIT_ATTEMPTS} times in a row"
+        log.warning("%s: commit refused: %s", self.root, msg)
+        raise ConflictError(msg)
 
     def _write_data(
         self,
@@ -1286,7 +1328,7 @@ class LakeTable:
         )
         snap = self.snapshot(fork_v)
         br = LakeTable(self.spark, self.root, branch_name=name)
-        if os.path.exists(br._version_ptr):
+        if br._versions():
             raise FileExistsError(f"branch {name!r} exists")
         br._write_snapshot(
             replace(
@@ -1302,29 +1344,24 @@ class LakeTable:
 
     def open_branch(self, name: str) -> "LakeTable":
         br = LakeTable(self.spark, self.root, branch_name=name)
-        if not os.path.exists(br._version_ptr):
+        if not br._versions():
             raise FileNotFoundError(f"no branch {name!r}")
         return br
 
     def list_branches(self) -> dict[str, int]:
-        out: dict[str, int] = {}
-        if os.path.isdir(self._snap_dir):
-            for f in sorted(os.listdir(self._snap_dir)):
-                if f.startswith("_VERSION-b-"):
-                    with open(os.path.join(self._snap_dir, f)) as fh:
-                        out[f[len("_VERSION-b-"):]] = int(fh.read().strip())
-        return out
+        descs = _descriptors(self._snap_dir)
+        descs.pop(None, None)
+        return {n: vs[-1] for n, vs in sorted(descs.items())}
 
     def drop_branch(self, name: str) -> None:
-        """Discard a branch: pointer + descriptors removed; data files
-        only the branch referenced become unreferenced and are reclaimed
-        by ``vacuum_orphans`` after its grace window."""
+        """Discard a branch: its descriptors are removed oldest first, so
+        a crash part-way leaves the branch at its head, never at an older
+        version; data files only the branch referenced become
+        unreferenced and are reclaimed by ``vacuum_orphans`` after its
+        grace window."""
         br = self.open_branch(name)
-        os.remove(br._version_ptr)
-        prefix = f"b-{name}-v"
-        for f in os.listdir(self._snap_dir):
-            if f.startswith(prefix) and f.endswith(".json"):
-                os.remove(os.path.join(self._snap_dir, f))
+        for v in br._versions():
+            os.remove(br._snap_path(v))
 
     def publish_branch(self, name: str) -> int:
         """Fast-forward main to the branch state (the PUBLISH half):
@@ -1355,17 +1392,6 @@ class LakeTable:
         )
         self.drop_branch(name)
         return version
-
-    def _branch_descriptor_files(self) -> list[str]:
-        """On-disk descriptors of LIVE branches (dropped branches leave
-        none) — every liveness sweep (retention, orphan vacuum) must
-        treat their referenced files as live."""
-        out = []
-        live = {f"b-{n}-v" for n in self.list_branches()}
-        for f in os.listdir(self._snap_dir):
-            if f.endswith(".json") and any(f.startswith(p) for p in live):
-                out.append(f)
-        return out
 
     def overwrite(
         self,
@@ -1428,7 +1454,7 @@ class LakeTable:
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         # read the SAME snapshot the carried-over epoch state comes from:
-        # version=None would re-read the current pointer, and a commit
+        # version=None would re-list the current version, and a commit
         # landing between snapshot() and here would make the rewritten
         # data inconsistent with recent_epochs/watermarks/manifests
         resolved = self.read_resolved(
@@ -1809,76 +1835,62 @@ class LakeTable:
                 f"{self.branch_name!r}); main's sweep keeps every branch's files"
             )
 
+    def _references(
+        self, descs: dict[str | None, list[int]]
+    ) -> tuple[set[str], set[str]]:
+        """(data files, manifest files) referenced by the descriptors in
+        ``descs`` (shaped like ``_descriptors``); one removed meanwhile
+        references nothing."""
+        files: set[str] = set()
+        manifests: set[str] = set()
+        for branch, versions in descs.items():
+            for v in versions:
+                path = os.path.join(self._snap_dir, _descriptor_name(branch, v))
+                try:
+                    with open(path) as fh:
+                        s = Snapshot.from_json(fh.read())
+                except FileNotFoundError:
+                    continue
+                for fs in (*s.bucket_files.values(), *s.delta_files.values()):
+                    files.update(fs)
+                manifests.update(s.manifest_files)
+        return files, manifests
+
     def expire_snapshots(self, keep_last: int = 2) -> None:
-        """Drop snapshot descriptors and data dirs no current snapshot
-        references (the REINDEX/compaction analog; Iceberg expire_snapshots).
+        """Expire old main snapshots and delete what only they reference
+        (Iceberg ``expire_snapshots``).
 
-        Tagged versions (``tag``) are retention roots: they, their
-        manifests, and their data files survive regardless of
-        ``keep_last`` until the tag is dropped.  Main handle only (see
-        ``_require_main``)."""
+        Expired: main descriptors numbered below ``current - keep_last +
+        1`` (the current one never) and not tagged (``tag``).  Live: every
+        other descriptor on disk — the kept window, tag targets and every
+        branch's.  Deleted: the expired descriptors (oldest first), the
+        manifests only they reference, and each data dir an expired
+        descriptor references and no live one does.  A commit landing
+        meanwhile builds on the current descriptor, so everything it
+        references is live or new; files no descriptor references (a
+        commit in flight, a failed one) are left to ``vacuum_orphans``
+        and its grace window.  Main handle only (see ``_require_main``)."""
         self._require_main("expire_snapshots")
-        current = self.current_version()
-        keep = set(range(max(0, current - keep_last + 1), current + 1))
-        keep |= {v for v in self.tags().values() if v <= current}
-        live_files: set[str] = set()
-        live_manifests: set[str] = set()
-        for v in keep:
-            try:
-                s = self.snapshot(v)
-            except FileNotFoundError:
-                continue
-            for fs in s.bucket_files.values():
-                live_files.update(fs)
-            for fs in s.delta_files.values():
-                live_files.update(fs)
-            live_manifests.update(s.manifest_files)
-        # live branches reference shared data/ files from their own
-        # descriptors — staged-but-unpublished state must survive main's
-        # retention sweep
-        for f in self._branch_descriptor_files():
-            with open(os.path.join(self._snap_dir, f)) as fh:
-                s = Snapshot.from_json(fh.read())
-            for fs in s.bucket_files.values():
-                live_files.update(fs)
-            for fs in s.delta_files.values():
-                live_files.update(fs)
-            live_manifests.update(s.manifest_files)
-        # manifest files no retained descriptor references: compaction
-        # inputs and crash/race orphans.  Files above the current version
-        # may belong to an in-flight commit — left alone until it resolves.
-        if os.path.isdir(self._manifest_dir):
-            for f in os.listdir(self._manifest_dir):
-                if (
-                    f.startswith("m")
-                    and f.endswith(".parquet")
-                    and f not in live_manifests
-                    and int(f[1:9]) <= current
-                ):
-                    os.remove(os.path.join(self._manifest_dir, f))
-        data_dir = os.path.join(self.root, "data")
-        if os.path.isdir(data_dir):
-            for sdir in os.listdir(data_dir):
-                full = os.path.join(data_dir, sdir)
-                rels: set[str] = set()
-                for e in os.listdir(full):
-                    p = os.path.join(full, e)
-                    if e.startswith(BUCKET_COL) and os.path.isdir(p):
-                        rels.update(
-                            os.path.join("data", sdir, e, f) for f in os.listdir(p)
-                        )
-                    elif e.endswith(".parquet"):
-                        # fanout delta files live at the snapshot-dir top
-                        # level (no bucket subdirs) — without this branch
-                        # their dirs were never considered for reclaim
-                        rels.add(os.path.join("data", sdir, e))
-                if rels and not (rels & live_files):
-                    import shutil
+        descs = _descriptors(self._snap_dir)
+        main = descs[None]
+        floor = main[-1] - max(keep_last, 1) + 1
+        tagged = set(self.tags().values())
+        expired = [v for v in main if v < floor and v not in tagged]
+        if not expired:
+            return
+        descs[None] = [v for v in main if v >= floor or v in tagged]
+        gone_files, gone_manifests = self._references({None: expired})
+        live_files, live_manifests = self._references(descs)
+        for v in expired:
+            os.remove(self._snap_path(v))
+        for m in gone_manifests - live_manifests:
+            os.remove(os.path.join(self._manifest_dir, m))
 
-                    shutil.rmtree(full)
-        for f in os.listdir(self._snap_dir):
-            if f.startswith("v") and int(f[1:9]) not in keep:
-                os.remove(os.path.join(self._snap_dir, f))
+        def dirs(files: set[str]) -> set[str]:
+            return {os.path.join(*f.split(os.sep)[:2]) for f in files}
+
+        for d in dirs(gone_files) - dirs(live_files):
+            shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
 
     def vacuum_orphans(
         self, grace_seconds: float = 3600.0, now: float | None = None
@@ -1886,11 +1898,12 @@ class LakeTable:
         """Remove files NO on-disk snapshot descriptor references — the
         Iceberg ``remove_orphan_files`` analog, complementing
         ``expire_snapshots`` (which handles *retention*; this handles
-        *failures*): data dirs written by committers that lost the
-        descriptor's O_EXCL race and then crashed or raised
-        ``ConflictError`` before rebasing, manifest spills from the same
-        losers, crash leftovers (``_SUCCESS``-only or empty data dirs the
-        retention sweep skips), and orphaned descriptor-staging tmp files.
+        *failures*): data dirs written by commits whose descriptor never
+        landed (a crash, an error, or a lost descriptor race ending in
+        ``ConflictError``), manifest spills from the same commits, crash
+        leftovers (``_SUCCESS``-only or empty data dirs), files only a
+        dropped branch referenced, and orphaned descriptor-staging tmp
+        files.  ``expire_snapshots`` never touches any of these.
 
         Safety is **age-gated**, never inferred from names: a racer's
         data dir can embed a version ≤ the current one and still be about
@@ -1910,23 +1923,7 @@ class LakeTable:
 
         now = _time.time() if now is None else now
         cutoff = now - grace_seconds
-        live: set[str] = set()
-        live_manifests: set[str] = set()
-        branch_descs = set(self._branch_descriptor_files())
-        for f in os.listdir(self._snap_dir):
-            is_main = f.startswith("v") and f.endswith(".json")
-            if not (is_main or f in branch_descs):
-                continue
-            try:
-                with open(os.path.join(self._snap_dir, f)) as fh:
-                    s = Snapshot.from_json(fh.read())
-            except FileNotFoundError:
-                continue
-            for fs in s.bucket_files.values():
-                live.update(fs)
-            for fs in s.delta_files.values():
-                live.update(fs)
-            live_manifests.update(s.manifest_files)
+        live, live_manifests = self._references(_descriptors(self._snap_dir))
 
         def _old(path: str) -> bool:
             try:
@@ -1967,16 +1964,10 @@ class LakeTable:
                     os.remove(p)
                     removed["manifests"] += 1
         for f in os.listdir(self._snap_dir):
-            if (
-                (f.startswith("v") and f.endswith(".json"))
-                or f.startswith("_VERSION")  # main pointer + branch pointers
-                or f in branch_descs  # live-branch descriptors
-            ):
-                continue
             p = os.path.join(self._snap_dir, f)
-            if os.path.isfile(p) and _old(p):
-                # mkstemp leftover from a crashed pointer swap, or a
-                # dropped branch's stray descriptor
+            if f.startswith("tmp") and _old(p):
+                # a descriptor staged (``mkstemp``) by a commit that died
+                # before it could unlink the file
                 os.remove(p)
                 removed["tmp_files"] += 1
         return removed
@@ -1984,7 +1975,8 @@ class LakeTable:
     def history(self) -> DataFrame:
         """Retained snapshots as a metadata DataFrame (Iceberg's
         ``.snapshots`` / ``.history`` metadata tables): one row per
-        descriptor still on disk — version, file/delta counts, schema
+        descriptor of this handle (main, or its branch) still on disk —
+        version, file/delta counts, schema
         width, watermark count, committed-epoch window size.
 
         Driver-side JSON reads, but bounded: ``expire_snapshots`` caps
@@ -1992,10 +1984,8 @@ class LakeTable:
         commit history.
         """
         rows = []
-        for f in sorted(os.listdir(self._snap_dir)):
-            if not (f.startswith("v") and f.endswith(".json")):
-                continue
-            s = self.snapshot(int(f[1:9]))
+        for v in self._versions():
+            s = self.snapshot(v)
             rows.append(
                 {
                     "version": s.version,

@@ -153,6 +153,45 @@ def test_branch_validation_and_guards(spark, staged):
     t.drop_branch("a")
 
 
+def test_drop_branch_spares_a_branch_whose_name_extends_it(spark, staged):
+    """Branch names may hold ``-v``: dropping ``a`` used to delete every
+    file starting ``b-a-v``, branch ``a-v1``'s descriptors included."""
+    t, batches = staged
+    a = t.create_branch("a")
+    av1 = t.create_branch("a-v1")
+    apply_batch(av1, batches[1], epoch=1)
+    want = _state(av1)
+    assert t.list_branches() == {
+        "a": a.current_version(),
+        "a-v1": av1.current_version(),
+    }
+
+    t.drop_branch("a")
+    with pytest.raises(FileNotFoundError):
+        t.open_branch("a")
+    assert t.list_branches() == {"a-v1": av1.current_version()}
+    assert _state(t.open_branch("a-v1")) == want
+
+
+def test_history_on_a_branch_lists_the_branch_versions(spark, staged):
+    t, batches = staged
+    br = t.create_branch("wap")
+    fork_v = br.current_version()
+    apply_batch(br, batches[1], epoch=1)
+    apply_batch(br, batches[2], epoch=2)
+    apply_batch(t, batches[1], epoch=1)  # main moves on too
+
+    def versions(h):
+        return [r["version"] for r in h.history().orderBy("version").collect()]
+
+    assert versions(br) == [fork_v, fork_v + 1, fork_v + 2]
+    assert versions(t) == list(range(t.current_version() + 1))
+    last = br.history().orderBy(F.desc("version")).first()
+    assert last["n_delta_files"] == sum(
+        len(fs) for fs in br.snapshot().delta_files.values()
+    )
+
+
 def test_rollback_to_tag_refused_on_branch_handle(spark, staged):
     """Tags name MAIN versions, but a branch handle opens its own
     descriptors: rolling a branch back to a tag used to restore the

@@ -151,6 +151,27 @@ def test_compact_manifests_merges_to_one_file(spark, tmp_table_dir):
     assert table.compact_manifests() == 0
 
 
+def test_tiered_merge_deletes_the_spill_it_absorbed(
+    spark, tmp_table_dir, monkeypatch
+):
+    """A commit whose own manifest spill is merged into a tier file at
+    once never lists that spill, so no descriptor ever references it and
+    ``expire_snapshots`` would never reclaim it: the merge deletes it."""
+    monkeypatch.setattr(table_mod, "MANIFEST_TAIL_MAX", 2)
+    events = generate_events(spark, 300, seed=33).localCheckpoint(eager=True)
+    table = create_pages_table(spark, tmp_table_dir, n_buckets=4)
+    for i in range(3):
+        batch = events.filter(F.pmod(F.col("source_pos"), F.lit(3)) == i)
+        apply_batch(table, batch, epoch=i, compact_depth=100)
+    assert len(table.snapshot().manifest_files) == 1  # the tier merge ran
+    referenced = {
+        n
+        for v in range(table.current_version() + 1)
+        for n in table.snapshot(v).manifest_files
+    }
+    assert set(os.listdir(table._manifest_dir)) == referenced
+
+
 def test_snapshot_migrates_legacy_descriptor():
     """Descriptors written before the metadata-scale change (inline
     `manifests` rows + unbounded `committed_epochs`) still open: epochs
