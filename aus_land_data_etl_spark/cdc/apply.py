@@ -1,4 +1,6 @@
-"""Micro-batch apply: project → extract → manifest → MERGE.
+"""Micro-batch apply: project → extract → MERGE, with the lineage
+manifest computed beside the write (merge-on-read) or before it
+(copy-on-write, which needs the touched buckets first).
 
 This is the ``foreachBatch`` body of the streaming pipeline and the unit
 the replay/state-equivalence suite drives directly.  Everything in the hot
@@ -8,9 +10,12 @@ Python (input_hint).
 
 from __future__ import annotations
 
-from typing import Any
+import logging
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 from aus_land_data_etl_spark.cdc.events import PAGES_SCHEMA
@@ -19,18 +24,23 @@ from aus_land_data_etl_spark.functions.text import extract_text_udf, lang_id
 from aus_land_data_etl_spark.lake.merge import merge_into
 from aus_land_data_etl_spark.lake.table import LakeTable
 
-#: Target rows per write task.  The manifest aggregation already knows the
-#: batch row count, so the delta write coalesces to ≈ this many rows per
-#: task.  Sizing is a balance: too few rows/task and Python-worker + task
-#: overhead dominates (a 5k-row batch must not fan into 32 near-empty
-#: tasks); too many and the extraction UDF — the per-batch critical path —
-#: underfills the cluster (measured on local[32], 51k-row batches, warm
-#: workers, best-of-3 interleaved trials: 7.4s at 3 tasks vs 4.7s at
-#: 12–32 tasks; worse under contention).  4k rows ≈ 5 MB of html per
-#: task keeps every core busy from ~1 core-count rows upward while a
-#: 10M-row batch still fans out across the whole cluster (coalesce only
-#: ever shrinks partitioning, so large batches are untouched).
-ROWS_PER_WRITE_TASK = 4_000
+log = logging.getLogger(__name__)
+
+#: Target input bytes per write task, against the size estimate of the
+#: batch's optimized plan (``write_tasks``), which for parquet inputs —
+#: the WAL, the streaming runner's micro-batches — is their on-disk size.
+#: 1 MiB is about 4,500 generator events of WAL parquet as pyarrow writes
+#: it (232 B/event), or 11,000 as Spark's tighter writer does.  Sizing is
+#: a balance: too little per task and Python-worker + task overhead
+#: dominates (a 5k-row batch must not fan into 32 near-empty tasks); too
+#: much and the extraction UDF — the per-batch critical path — underfills
+#: the cluster (measured on local[32], 51k-row batches, warm workers,
+#: best-of-3 interleaved trials: 7.4s at 3 tasks vs 4.7s at 12–32 tasks;
+#: worse under contention).  coalesce only ever shrinks partitioning, so
+#: a large batch keeps its own.
+BYTES_PER_WRITE_TASK = 1 << 20
+#: coalesce takes a JVM int
+_JVM_INT_MAX = 2**31 - 1
 
 
 def write_dead_letters(
@@ -276,7 +286,10 @@ def manifest_frame(
 
 
 def compute_manifest(
-    batch: DataFrame, n_buckets: int | None = None, runs: bool = False
+    batch: DataFrame,
+    n_buckets: int | None = None,
+    runs: bool = False,
+    collected: Callable[[], list[Row]] | None = None,
 ) -> tuple[list[dict[str, Any]], list[int]]:
     """Per-source-partition lineage + the touched-bucket set, in ONE action.
 
@@ -293,8 +306,14 @@ def compute_manifest(
     The touched-bucket ids piggyback on the same aggregation
     (``collect_set`` per group, unioned driver-side — bounded by
     n_buckets) so the merge needs no separate probe job.
+
+    ``collected``: waits for ``manifest_frame``'s rows collected on
+    another thread (``_beside``); by default they are collected here.
     """
-    rows = manifest_frame(batch, n_buckets, runs=runs).collect()
+    if collected is not None:
+        rows = collected()
+    else:
+        rows = manifest_frame(batch, n_buckets, runs=runs).collect()
     touched: set[int] = set()
     manifest = []
     for r in rows:
@@ -397,8 +416,11 @@ def apply_batch(
     epoch id and the content key, so a batch applied one way is recognised
     as committed the other way (mixed batch/streaming replay safety).
     Replays older than the recent-epoch window are caught by the offset
-    watermarks (see ``lake.table``); either way a replayed batch skips the
-    expensive extraction + write entirely.
+    watermarks (see ``lake.table``).  A replay of an explicit epoch id is
+    a no-op before any job runs.  A content-key or watermark replay is
+    only known once the manifest is: copy-on-write checks it before its
+    merge; merge-on-read runs its manifest job beside its write, so the
+    commit finds the replay and deletes the write it no longer needs.
 
     ``dead_letter`` (default on, full images only): events whose
     ``schema_version`` the registry does not know are quarantined raw
@@ -426,53 +448,71 @@ def apply_batch(
             dead = Observation()
             scanned = events.observe(dead, F.count_if(registry.unknown()).alias("n"))
         batch = prepare_batch(scanned, registry)
+
+    def commit_keys(
+        manifest: list[dict[str, Any]],
+    ) -> tuple[list[str], list[dict[str, Any]]]:
+        """Quarantine the batch's dead letters (before the skip check and
+        the commit), then return its epoch keys and lineage rows."""
+        if dead is not None:
+            n_dead = (
+                dead.get["n"]
+                if manifest
+                # no valid rows: Spark may have proven the input empty and
+                # run no job, which reports no metric — ask directly (rare)
+                else registry.dead_letter(events).count()
+            )
+            if n_dead:
+                # overwrite by epoch: replay-safe
+                write_dead_letters(table, events, epoch, registry)
+                log.warning(
+                    "%s: quarantined %d event(s) of unknown schema_version "
+                    "from batch %s", table.root, n_dead, epoch_id,
+                )
+        content_key = content_epoch_key(manifest)
+        epoch_num = int(epoch) if epoch_id.lstrip("-").isdigit() else -1
+        for m in manifest:
+            m["epoch"] = epoch_num
+        return [content_key] if content_keyed else [epoch_id, content_key], manifest
+
+    # Right-size the write without a job: coalesce (no shuffle; the
+    # projection+extraction run inside the merged tasks) to the input's
+    # size estimate over BYTES_PER_WRITE_TASK.
+    payload = batch.drop("source_partition", "source_offset").coalesce(
+        write_tasks(events)
+    )
     # No persist: the manifest aggregation reads only envelope columns, so
     # Catalyst's column pruning drops the (deterministic) extraction UDF
     # from that job entirely — the expensive html→text pass runs exactly
     # once, inside the merge write.  (Persisting here would force a full
     # materialisation including extraction — strictly worse.)
-    manifest, touched = compute_manifest(
-        batch, n_buckets=snap.n_buckets, runs=run_manifests
-    )
-    if dead is not None and (
-        dead.get["n"]
-        if manifest
-        # no valid rows: Spark may have proven the input empty and run no
-        # job, which reports no metric — ask directly (rare)
-        else not registry.dead_letter(events).isEmpty()
-    ):
-        # quarantine before the skip check and the commit (overwrite by
-        # epoch: replay-safe)
-        write_dead_letters(table, events, epoch, registry)
-    content_key = content_epoch_key(manifest)
-    epoch_ids = [content_key] if content_keyed else [epoch_id, content_key]
-    # Watermark-based skip (for replays older than the recent-epoch window)
-    # is sound only under the WAL contract — unique, monotone offsets per
-    # source partition — which the caller declares via ``wal_offsets``.
-    if snap.is_applied(epoch_ids, manifest if wal_offsets else None):
-        return snap.version  # identical batch content already applied
-    epoch_num = int(epoch) if str(epoch).lstrip("-").isdigit() else -1
-    for m in manifest:
-        m["epoch"] = epoch_num
-    # Right-size the write: the manifest just counted the batch, so shrink
-    # a small micro-batch to ~ROWS_PER_WRITE_TASK rows per task (coalesce
-    # — no shuffle; the projection+extraction run inside the merged tasks;
-    # it never adds partitions, so a large batch keeps its own).
-    total_rows = sum(m["row_count"] for m in manifest)
-    payload = batch.drop("source_partition", "source_offset").coalesce(
-        max(1, -(-total_rows // ROWS_PER_WRITE_TASK))
-    )
-    # the merge resolves per cell when the payload carries _set_cols
+    n_buckets = snap.n_buckets
     if mode == "mor":
-        return delta_merge_into(
-            table,
-            payload,
-            tiebreak_col="event_id",
-            epoch_id=epoch_ids,
-            manifest_rows=manifest,
-            compact_depth=compact_depth,
-            wal_offsets=wal_offsets,
-        )
+        # The append needs neither the touched buckets nor the row count,
+        # so the manifest job runs beside the write and only the commit
+        # waits for it (Delta's rule: data files first, then the commit
+        # decides; a write no commit references is deleted).
+        with _beside(
+            lambda: manifest_frame(batch, n_buckets, runs=run_manifests).collect()
+        ) as rows:
+            # the merge resolves per cell when the payload carries _set_cols
+            return delta_merge_into(
+                table,
+                payload,
+                tiebreak_col="event_id",
+                lineage=lambda: commit_keys(
+                    compute_manifest(
+                        batch, n_buckets, runs=run_manifests, collected=rows
+                    )[0]
+                ),
+                compact_depth=compact_depth,
+                wal_offsets=wal_offsets,
+            )
+    manifest, touched = compute_manifest(batch, n_buckets, runs=run_manifests)
+    epoch_ids, manifest = commit_keys(manifest)
+    # merge_into skips a batch it finds applied (content key, or the
+    # watermarks — sound only under the WAL contract, which the caller
+    # declares via ``wal_offsets``) before reading or writing anything
     return merge_into(
         table,
         payload,
@@ -482,6 +522,52 @@ def apply_batch(
         touched=touched,
         wal_offsets=wal_offsets,
     )
+
+
+def write_tasks(events: DataFrame) -> int:
+    """Tasks for the write of ``events``: the size estimate of its
+    optimized plan (no job runs) over ``BYTES_PER_WRITE_TASK``, at least
+    one.  Spark reports an unknown size (an RDD-backed frame) as
+    ``Long.MaxValue``; clamped to the JVM int range, the ``coalesce``
+    then keeps the input's own partitioning."""
+    stats = events._jdf.queryExecution().optimizedPlan().stats()
+    size = int(str(stats.sizeInBytes()))  # a scala BigInt
+    return max(1, min(_JVM_INT_MAX, -(-size // BYTES_PER_WRITE_TASK)))
+
+
+@contextmanager
+def _beside(action: Callable[[], Any]) -> Iterator[Callable[[], Any]]:
+    """Run ``action`` on a helper thread beside the body of the ``with``;
+    yields a callable that waits for its result and re-raises its error
+    on the caller.
+
+    An ``InheritableThread``, so the action's Spark jobs carry the
+    caller's job group and local properties.  Only read actions belong
+    here: lake writes set and restore session conf around themselves
+    (``_stats_bearing_timestamps``), which is not thread-safe.  The
+    thread is joined on every exit path, so none outlives the call.
+    """
+    out: dict[str, Any] = {}
+
+    def run() -> None:
+        try:
+            out["value"] = action()
+        except BaseException as e:  # re-raised on the caller by result()
+            out["error"] = e
+
+    helper = InheritableThread(target=run, name="cdc-manifest", daemon=True)
+    helper.start()
+
+    def result() -> Any:
+        helper.join()
+        if "error" in out:
+            raise out["error"]
+        return out["value"]
+
+    try:
+        yield result
+    finally:
+        helper.join()
 
 
 def prepare_patch_batch(events: DataFrame) -> DataFrame:

@@ -59,7 +59,7 @@ def generate_events(
         # would dominate — while anything from ~1 core-count of rows
         # upward fills every core for the downstream extraction UDF
         # (measured: 51k-row batches write 1.6-7x faster at 12-32 tasks
-        # than at 3, warm workers — see cdc/apply.py ROWS_PER_WRITE_TASK).
+        # than at 3, warm workers — see cdc/apply.py BYTES_PER_WRITE_TASK).
         n_partitions = max(
             1,
             min(spark.sparkContext.defaultParallelism, n_events // 4_000 or 1),

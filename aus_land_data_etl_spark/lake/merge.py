@@ -22,7 +22,8 @@ dedup_lot_layer.sql:16-35, sql/nsw_spatial/schema/002_APPLY_staging.sql:14-21):
 
 from __future__ import annotations
 
-from typing import Any
+import logging
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,6 +38,8 @@ from aus_land_data_etl_spark.operators.patch import (
     resolve,
     resolve_cells,
 )
+
+log = logging.getLogger(__name__)
 
 #: Internal columns the merge maintains on the target table.
 DELETED_COL = "is_deleted"
@@ -93,6 +96,20 @@ def _select(df: DataFrame, cols: dict[str, tuple[str, Any]], schema=None) -> Dat
     return df.selectExpr(*out)
 
 
+def _applied(table: LakeTable, snap, epoch_id, wm_rows) -> bool:
+    """``snap.is_applied``, logged: a merge that finds its batch applied
+    before it writes discards nothing (the commit loop logs the skips it
+    finds after a write, with the files they discard)."""
+    if not snap.is_applied(epoch_id, wm_rows):
+        return False
+    log.debug(
+        "%s: batch %s already applied at v%d; "
+        "skipped before the write, 0 files discarded",
+        table.root, epoch_id, snap.version,
+    )
+    return True
+
+
 def merge_into(
     table: LakeTable,
     batch: DataFrame,
@@ -114,7 +131,7 @@ def merge_into(
     otherwise.  Returns the committed snapshot version.
     """
     snap = table.snapshot()
-    if snap.is_applied(epoch_id, manifest_rows if wal_offsets else None):
+    if _applied(table, snap, epoch_id, manifest_rows if wal_offsets else None):
         return snap.version  # idempotent replay: already applied
     key, ver = snap.key_col, snap.version_col
     cells = per_cell(batch.columns, snap.schema.names)
@@ -233,6 +250,7 @@ def delta_merge_into(
     manifest_rows: list[dict[str, Any]] | None = None,
     compact_depth: int = 8,
     wal_offsets: bool = False,
+    lineage: Callable[[], tuple[list[str], list[dict[str, Any]]]] | None = None,
 ) -> int:
     """Merge-on-read apply: O(batch) per epoch.
 
@@ -249,9 +267,13 @@ def delta_merge_into(
     the snapshot schema).  When the delta stack reaches ``compact_depth``
     commits the table is folded (the amortised rewrite the reference's
     REINDEX step performs in bulk).
+
+    ``lineage`` (``apply_batch``): waits for the batch's epoch keys and
+    lineage rows, computed beside the write; ``commit_delta`` calls it
+    after the write, in place of ``epoch_id``/``manifest_rows``.
     """
     snap = table.snapshot()
-    if snap.is_applied(epoch_id, manifest_rows if wal_offsets else None):
+    if _applied(table, snap, epoch_id, manifest_rows if wal_offsets else None):
         return snap.version
     cols = _tombstoned(
         batch,
@@ -265,6 +287,7 @@ def delta_merge_into(
         manifest_rows=manifest_rows,
         epoch_id=epoch_id,
         wal_offsets=wal_offsets,
+        lineage=lineage,
     )
     if table.max_delta_depth() >= compact_depth:
         v = fold_deltas(table, tiebreak_col, min_stack=compact_depth)
@@ -334,6 +357,10 @@ def fold_deltas(table: LakeTable, tiebreak_col: str, min_stack: int = 1) -> int:
     )
     if not touched:
         return snap.version
+    log.debug(
+        "%s: folding %d bucket(s) %s into the base (stacks >= %d)",
+        table.root, len(touched), touched, max(1, min_stack),
+    )
     resolved = table.read_resolved(buckets=touched, tiebreak_col=tiebreak_col)
     resolved = resolved.repartition(snap.n_buckets, F.col(snap.key_col))
     # patch tables: resolution consumed _set_cols and materialised _cvers;

@@ -824,6 +824,7 @@ class LakeTable:
         tiebreak_col: str = "event_id",
         predicates: list[tuple] | None = None,
         columns: list[str] | None = None,
+        key_filter: Column | None = None,
     ) -> DataFrame:
         """LWW-resolved view over base ∪ deltas (merge-on-read).
 
@@ -845,6 +846,12 @@ class LakeTable:
         a cell does not depend on other cells' values.  This is what
         keeps a lang-only scan from shuffling multi-MB html blobs, and
         it reaches the parquet reader as ReadSchema pruning.
+
+        ``key_filter`` — a predicate on the key column only, applied
+        BELOW the resolution (exact: a key's winner depends only on that
+        key's rows).  For point reads (``lookup``): the few rows it keeps
+        resolve in one partition, so the read is one Spark job with no
+        exchange.
         """
         from aus_land_data_etl_spark.operators.patch import CELL_VERS, SET_COLS, resolve
 
@@ -860,15 +867,18 @@ class LakeTable:
 
         if not snap.delta_files:
             # base is already one-row-per-key
-            return project(
+            base = project(
                 self.read(
                     version=version, buckets=buckets, include_deltas=False,
                     predicates=predicates,
                 )
             )
+            return base if key_filter is None else base.filter(key_filter)
         raw = project(
             self.read(version=version, buckets=buckets, include_deltas=True)
         )
+        if key_filter is not None:
+            raw = raw.filter(key_filter).coalesce(1)
         # per cell on a partial-image table (its marker columns survive
         # the projection), per row otherwise
         return resolve(raw, snap.key_col, snap.version_col, tiebreak_col)
@@ -922,15 +932,18 @@ class LakeTable:
         parquet bloom filter on the key column (``bloom_cols`` table
         property) then skips row groups inside the kept files; zonemap
         equality pruning on the key column is useless here by design —
-        hash bucketing gives every file the full key range.
+        hash bucketing gives every file the full key range.  The key's
+        rows are filtered below the LWW resolution and resolved in one
+        partition: one Spark job with no exchange, delta layers or not
+        (a point read beside a busy ingest competes for fewer cores).
         """
         snap = self.snapshot(version)
         key = self._normalize_key(key)
         b = self.key_bucket(key, version)
         return self.read_resolved(
             version=version, buckets=[b], tiebreak_col=tiebreak_col,
-            columns=columns,
-        ).filter(F.col(snap.key_col) == F.lit(key))
+            columns=columns, key_filter=F.col(snap.key_col) == F.lit(key),
+        )
 
     def _normalize_key(self, key):
         """Interpret a NAIVE datetime key in the SESSION time zone — the
@@ -1027,6 +1040,8 @@ class LakeTable:
         manifest_rows: list[dict[str, Any]] | None = None,
         epoch_id: str | list[str] | None = None,
         wal_offsets: bool = False,
+        written: dict[str, list[str]] | None = None,
+        lineage: Callable[[], tuple[list[str], list[dict[str, Any]]]] | None = None,
     ) -> int:
         """The one commit loop (Iceberg's optimistic concurrency): every
         descriptor write after ``create`` is an update of a base snapshot.
@@ -1045,7 +1060,22 @@ class LakeTable:
         files, zonemaps carried for files that stay live plus ``stats``
         for the new ones.  A lost descriptor race rebases on the
         winner, at most ``COMMIT_ATTEMPTS`` times.
+
+        ``written`` — the data files this commit wrote (``_write_data``).
+        Their directory is unique to this commit, so no descriptor but
+        ours can reference it: a batch found already applied deletes it
+        at once instead of leaving it to ``vacuum_orphans``.
+        ``lineage`` — when the batch's ``(epoch_id, manifest_rows)`` are
+        computed beside the data write (merge-on-read apply), a callable
+        that waits for them; it runs first, and if it raises, ``written``
+        is deleted and the error propagates.
         """
+        if lineage is not None:
+            try:
+                epoch_id, manifest_rows = lineage()
+            except BaseException:
+                self._discard(written)
+                raise
         wm_rows = manifest_rows if wal_offsets else None
         cur = base
         for _attempt in range(COMMIT_ATTEMPTS):
@@ -1054,8 +1084,9 @@ class LakeTable:
                 cur = self.snapshot(at)
             if cur.is_applied(epoch_id, wm_rows):
                 log.debug(
-                    "%s: batch %s already applied at v%d",
-                    self.root, epoch_id, cur.version,
+                    "%s: batch %s already applied at v%d; "
+                    "%d uncommitted file(s) discarded",
+                    self.root, epoch_id, cur.version, self._discard(written),
                 )
                 return cur.version  # this very batch is already in
             if not inputs_unchanged(cur):
@@ -1093,6 +1124,14 @@ class LakeTable:
         msg = f"lost the descriptor race {COMMIT_ATTEMPTS} times in a row"
         log.warning("%s: commit refused: %s", self.root, msg)
         raise ConflictError(msg)
+
+    def _discard(self, written: dict[str, list[str]] | None) -> int:
+        """Delete the directories of ``written`` files no descriptor
+        references; return how many files they held."""
+        files = [f for fs in (written or {}).values() for f in fs]
+        for d in {os.path.join(*f.split(os.sep)[:2]) for f in files}:
+            shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
+        return len(files)
 
     def _write_data(
         self,
@@ -1622,6 +1661,7 @@ class LakeTable:
             manifest_rows=manifest_rows,
             epoch_id=epoch_id,
             wal_offsets=wal_offsets,
+            written=new_files,
         )
 
     def commit_delta(
@@ -1631,6 +1671,7 @@ class LakeTable:
         manifest_rows: list[dict[str, Any]] | None = None,
         epoch_id: str | list[str] | None = None,
         wal_offsets: bool = False,
+        lineage: Callable[[], tuple[list[str], list[dict[str, Any]]]] | None = None,
     ) -> int:
         """Merge-on-read commit: append the batch's rows as fanout (``"*"``)
         delta files, with no shuffle (``_write_data``).
@@ -1648,6 +1689,11 @@ class LakeTable:
         state is preserved, including a schema it may have evolved
         (field-name union).  If the racer already applied this same batch,
         the exactly-once guard returns its version instead.
+
+        ``lineage`` supplies ``(epoch_id, manifest_rows)`` once the write
+        is done (see ``_commit``): a batch whose content key or offsets
+        turn out to be applied already deletes its write and returns the
+        current version.
         """
         base = self.snapshot()
         # data is written once; every attempt re-references the same files
@@ -1680,6 +1726,8 @@ class LakeTable:
             manifest_rows=manifest_rows,
             epoch_id=epoch_id,
             wal_offsets=wal_offsets,
+            written=written,
+            lineage=lineage,
         )
 
     def commit_clustered_deltas(

@@ -81,9 +81,11 @@ def _batch_observations():
 
 def _observe_batch(batch_df: DataFrame):
     """(observed_df, handle) — metrics materialise as a side-effect of the
-    FIRST action over the returned frame (the manifest aggregation inside
-    ``apply_batch``), not as an extra job.  All referenced columns are
-    envelope columns, so the extraction UDF stays pruned out of that job.
+    first action over the returned frame to finish (the manifest
+    aggregation inside ``apply_batch``, or the merge-on-read write beside
+    it — both scan the whole batch), not as an extra job.  All referenced
+    columns are envelope columns, so the extraction UDF stays pruned out
+    of the manifest job.
     """
     from pyspark.sql import Observation
 
@@ -92,8 +94,10 @@ def _observe_batch(batch_df: DataFrame):
 
 
 def _drain_observation(obs, epoch_id: int) -> dict:
-    """Blocking read of the metric row (the manifest action has already
-    run by the time apply returns, so this never actually waits)."""
+    """Blocking read of the metric row.  Every action over the observed
+    frame reports it, and ``apply_batch`` joins all of its actions before
+    it returns — the manifest job and, on a merge-on-read batch, the
+    write running beside it — so this never actually waits."""
     m = dict(obs.get)
     m["epoch"] = int(epoch_id)
     m["min_ts"] = str(m["min_ts"])
@@ -192,8 +196,8 @@ def _tail(
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         counters["batches"] += 1
-        # metrics ride apply_batch's first action, its manifest job (ONE
-        # envelope scan per batch, shared with the dead-letter count)
+        # metrics ride apply_batch's manifest job (ONE envelope scan per
+        # batch, shared with the dead-letter count)
         batch_df, obs_handle = _observe_batch(batch_df)
         # content_keyed: the exactly-once key is the batch's content
         # identity (manifest digest), not the bare Spark batch id — batch

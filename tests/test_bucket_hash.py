@@ -74,15 +74,24 @@ def test_lookup_issues_exactly_one_job(spark, tmp_table_dir):
     key = ev.select("url").first()["url"]
 
     sc = spark.sparkContext
-    group = "lookup-one-job"
-    sc.setJobGroup(group, "point lookup job count")
-    try:
-        rows = t.lookup(key).collect()
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setJobGroup("", "")
+
+    def lookup_jobs(group):
+        sc.setJobGroup(group, "point lookup job count")
+        try:
+            rows = t.lookup(key).collect()
+            return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup("", "")
+
+    rows, n_jobs = lookup_jobs("lookup-one-job")
     assert len(rows) == 1
     assert n_jobs == 1, f"lookup launched {n_jobs} jobs, expected 1"
+    # over merge-on-read delta layers too: the key's rows resolve in one
+    # partition, with no exchange
+    apply_batch(t, generate_events(spark, 500, seed=14), epoch=1, mode="mor")
+    rows, n_jobs = lookup_jobs("lookup-one-job-mor")
+    assert t.snapshot().delta_files and len(rows) == 1
+    assert n_jobs == 1, f"lookup over deltas launched {n_jobs} jobs, expected 1"
 
 
 def test_timestamp_hash_parity(spark):

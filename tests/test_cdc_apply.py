@@ -7,6 +7,8 @@ orderings and replays must converge to an identical final table.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -393,3 +395,169 @@ def test_generator_offset_base_continues_wal(spark):
     assert overlap == 0
     # event ids are globally unique across segments
     assert a.select("event_id").union(b.select("event_id")).distinct().count() == 150
+
+
+# -- the merge-on-read manifest job runs beside the write -------------------
+
+
+def _wal_batch(spark, root, n=150, n_files=3, seed=61, offset_base=0):
+    """``n`` generated events as a WAL of ``n_files`` parquet files, read
+    back the way the streaming runner reads them."""
+    from aus_land_data_etl_spark.cdc.events import EVENT_SCHEMA
+    from aus_land_data_etl_spark.streaming.runner import write_event_log
+
+    events = generate_events(spark, n, seed=seed, offset_base=offset_base)
+    write_event_log(events, str(root), n_files=n_files)
+    return spark.read.schema(EVENT_SCHEMA).parquet(str(root))
+
+
+def _data_dirs(t):
+    return sorted(os.listdir(os.path.join(t.root, "data")))
+
+
+def _descriptors(t):
+    return sorted(os.listdir(os.path.join(t.root, "_snapshots")))
+
+
+def _spy_writes(monkeypatch) -> list[str]:
+    """The data directories every ``LakeTable._write_data`` call writes,
+    from now on."""
+    from aus_land_data_etl_spark.lake.table import LakeTable
+
+    dirs: list[str] = []
+    write = LakeTable._write_data
+
+    def spy(self, *args, **kwargs):
+        files, stats = write(self, *args, **kwargs)
+        dirs.extend({os.path.dirname(f) for fs in files.values() for f in fs})
+        return files, stats
+
+    monkeypatch.setattr(LakeTable, "_write_data", spy)
+    return dirs
+
+
+@pytest.mark.parametrize("replay", ["content_key", "watermark"])
+def test_mor_replay_deletes_its_write_at_once(spark, tmp_path, monkeypatch, replay):
+    """A merge-on-read batch finds a content-key or watermark replay only
+    at its commit, after its write: it returns the current version,
+    leaves descriptors, delta file lists and ``data/`` as they were, and
+    deletes the write it ran at once — nothing is left for
+    ``vacuum_orphans``."""
+    batch = _wal_batch(spark, tmp_path / "wal")
+    t = create_pages_table(spark, str(tmp_path / "t"), n_buckets=4)
+    v = apply_batch(t, batch, epoch=0, content_keyed=True, wal_offsets=True)
+    before = (_descriptors(t), t.snapshot().delta_files, _data_dirs(t))
+    writes = _spy_writes(monkeypatch)
+    # the same content under a new batch id, or a part of the batch: a
+    # new content key whose offsets sit under the watermarks
+    again = batch if replay == "content_key" else batch.filter("source_offset < 5")
+    assert apply_batch(t, again, epoch=1, content_keyed=True, wal_offsets=True) == v
+    assert (_descriptors(t), t.snapshot().delta_files, _data_dirs(t)) == before
+    assert len(writes) == 1  # the write ran beside the manifest job ...
+    assert not os.path.exists(os.path.join(t.root, writes[0]))  # ... and is gone
+
+
+def test_failed_manifest_job_leaves_no_thread_or_write(spark, tmp_path, monkeypatch):
+    """A manifest job that raises beside the write makes ``apply_batch``
+    raise its error: the helper thread is joined, the write it ran beside
+    is deleted, nothing commits, and the next apply commits."""
+    import threading
+
+    from aus_land_data_etl_spark.cdc import apply as apply_mod
+
+    batch = _wal_batch(spark, tmp_path / "wal")
+    t = create_pages_table(spark, str(tmp_path / "t"), n_buckets=4)
+    v = apply_batch(t, batch.filter("source_offset < 5"), epoch=0)
+    dirs = _data_dirs(t)
+
+    def failing(*args, **kwargs):
+        raise RuntimeError("manifest job failed")
+
+    monkeypatch.setattr(apply_mod, "manifest_frame", failing)
+    writes = _spy_writes(monkeypatch)
+    with pytest.raises(RuntimeError, match="manifest job failed"):
+        apply_batch(t, batch, epoch=1)
+    assert not [th for th in threading.enumerate() if th.name == "cdc-manifest"]
+    assert len(writes) == 1 and _data_dirs(t) == dirs
+    assert t.current_version() == v
+    monkeypatch.undo()
+    assert apply_batch(t, batch, epoch=1) == v + 1
+
+
+def test_write_sized_from_plan_estimate(spark, tmp_path):
+    """The write's task count comes from the input plan's size estimate,
+    with no job: a 150-row batch over 3 parquet files writes ONE delta
+    file, and an RDD-backed input (unknown size, ``Long.MaxValue``)
+    keeps its own partitioning instead of overflowing ``coalesce``."""
+    from aus_land_data_etl_spark.cdc.apply import write_tasks
+
+    batch = _wal_batch(spark, tmp_path / "wal")
+    assert batch.rdd.getNumPartitions() == 3 and write_tasks(batch) == 1
+    t = create_pages_table(spark, str(tmp_path / "t"), n_buckets=4)
+    apply_batch(t, batch, epoch=0)
+    assert len(t.snapshot().delta_files["*"]) == 1
+
+    more = _wal_batch(spark, tmp_path / "wal2", seed=62, offset_base=150)
+    rdd_backed = spark.createDataFrame(more.rdd, more.schema)
+    assert write_tasks(rdd_backed) == 2**31 - 1
+    apply_batch(t, rdd_backed, epoch=1)
+    both = batch.unionByName(more)
+    cols = ["url", "warc_ts", "event_id", "text", "lang", "fetch_status"]
+    assert state_fingerprint(read_current(t).select(*cols)) == state_fingerprint(
+        expected_final(both)
+    )
+
+
+def test_apply_logs_skip_quarantine_and_fold(spark, tmp_path, caplog):
+    """``apply_batch`` says why a batch was quarantined, skipped or folded:
+    WARNING with the dead-letter count, DEBUG on a content-key skip with
+    the files it discarded (0 when found before the write), DEBUG at
+    fold start with the buckets it touches."""
+    import logging
+    import re
+
+    from aus_land_data_etl_spark.lake.merge import fold_deltas
+
+    caplog.set_level(logging.DEBUG, logger="aus_land_data_etl_spark")
+    ev = generate_events(spark, 200, seed=63).localCheckpoint(eager=True)
+    batch = ev.withColumn(
+        "schema_version",
+        F.when(F.pmod(F.col("source_pos"), F.lit(10)) == 0, F.lit(99)).otherwise(
+            F.col("schema_version")
+        ),
+    )
+    n_bad = batch.filter("schema_version = 99").count()
+    t = create_pages_table(spark, str(tmp_path / "mor"), n_buckets=4)
+    apply_batch(t, batch, epoch=0)
+    apply_batch(t, batch, epoch=1)  # the same content again
+    fold_deltas(t, "event_id")
+    cow = create_pages_table(spark, str(tmp_path / "cow"), n_buckets=4)
+    apply_batch(cow, ev, epoch=0, mode="cow")
+    apply_batch(cow, ev, epoch=1, mode="cow")
+
+    def said(logger, level):
+        return [
+            r.getMessage() for r in caplog.records
+            if r.name == f"aus_land_data_etl_spark.{logger}" and r.levelno == level
+        ]
+
+    assert said("cdc.apply", logging.WARNING) == [
+        f"{t.root}: quarantined {n_bad} event(s) of unknown schema_version "
+        f"from batch {e}"
+        for e in (0, 1)
+    ]
+    skips = [
+        m for m in said("lake.table", logging.DEBUG) if "already applied" in m
+    ]
+    assert len(skips) == 1 and skips[0].startswith(t.root)
+    assert int(re.search(r"(\d+) uncommitted file\(s\) discarded", skips[0])[1]) >= 1
+    merge_debug = said("lake.merge", logging.DEBUG)
+    assert [m for m in merge_debug if "already applied" in m] == [
+        f"{cow.root}: batch ['1', '{cow.snapshot().recent_epochs[-1]}'] already "
+        f"applied at v1; skipped before the write, "
+        "0 files discarded"
+    ]
+    folds = [m for m in merge_debug if "folding" in m]
+    assert folds == [
+        f"{t.root}: folding 4 bucket(s) [0, 1, 2, 3] into the base (stacks >= 1)"
+    ]
