@@ -29,16 +29,22 @@ log = logging.getLogger(__name__)
 #: Target input bytes per write task, against the size estimate of the
 #: batch's optimized plan (``write_tasks``), which for parquet inputs —
 #: the WAL, the streaming runner's micro-batches — is their on-disk size.
-#: 1 MiB is about 4,500 generator events of WAL parquet as pyarrow writes
-#: it (232 B/event), or 11,000 as Spark's tighter writer does.  Sizing is
-#: a balance: too little per task and Python-worker + task overhead
-#: dominates (a 5k-row batch must not fan into 32 near-empty tasks); too
-#: much and the extraction UDF — the per-batch critical path — underfills
-#: the cluster (measured on local[32], 51k-row batches, warm workers,
-#: best-of-3 interleaved trials: 7.4s at 3 tasks vs 4.7s at 12–32 tasks;
-#: worse under contention).  coalesce only ever shrinks partitioning, so
-#: a large batch keeps its own.
-BYTES_PER_WRITE_TASK = 1 << 20
+#: 384 KiB is about 4,100 generator events of WAL parquet as the engine's
+#: own writer (``streaming.runner.write_event_log``) lays it out (95
+#: B/event), the 4,000 rows per task the row-count rule used to target.
+#: Other inputs get smaller tasks: about 1,700 events of WAL parquet as
+#: pyarrow writes it (234 B/event), and about 1,500 rows of an in-memory
+#: ``generate_events`` frame (its plan estimates 260 B/row) — though such
+#: a frame is already partitioned at about 4,000 rows, which coalesce
+#: never splits.  Sizing is a balance: too little per task and
+#: Python-worker + task overhead dominates (a 5k-row batch must not fan
+#: into 32 near-empty tasks); too much and the extraction UDF — the
+#: per-batch critical path — underfills the cluster (measured on
+#: local[32], 51k-row batches, warm workers, best-of-3 interleaved
+#: trials: 7.4s at 3 tasks vs 4.7s at 12–32 tasks; worse under
+#: contention).  coalesce only ever shrinks partitioning, so a large
+#: batch keeps its own.
+BYTES_PER_WRITE_TASK = 384 << 10
 #: coalesce takes a JVM int
 _JVM_INT_MAX = 2**31 - 1
 
@@ -421,6 +427,11 @@ def apply_batch(
     only known once the manifest is: copy-on-write checks it before its
     merge; merge-on-read runs its manifest job beside its write, so the
     commit finds the replay and deletes the write it no longer needs.
+    That trade favours batches that are not replays: a merge-on-read
+    replay pays its extraction and write, where it used to pay only the
+    manifest job.  A streaming runner meets one such replay per restart
+    (the batch in flight when it stopped), and a whole WAL of them when
+    it re-drains the log under a fresh checkpoint.
 
     ``dead_letter`` (default on, full images only): events whose
     ``schema_version`` the registry does not know are quarantined raw

@@ -29,7 +29,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aus_land_data_etl_spark.lake.table import BUCKET_COL, LakeTable, bucket_expr
+from aus_land_data_etl_spark.lake.table import (
+    BUCKET_COL,
+    LakeTable,
+    Lineage,
+    bucket_expr,
+)
 from aus_land_data_etl_spark.operators.dedup import lww_latest
 from aus_land_data_etl_spark.operators.patch import (
     CELL_VERS,
@@ -250,7 +255,7 @@ def delta_merge_into(
     manifest_rows: list[dict[str, Any]] | None = None,
     compact_depth: int = 8,
     wal_offsets: bool = False,
-    lineage: Callable[[], tuple[list[str], list[dict[str, Any]]]] | None = None,
+    lineage: Callable[[], Lineage] | None = None,
 ) -> int:
     """Merge-on-read apply: O(batch) per epoch.
 

@@ -124,6 +124,13 @@ MANIFEST_SCHEMA = T.StructType(
 )
 
 
+#: ``read_resolved``'s default: resolve every key.
+_EVERY_KEY = object()
+
+#: A batch's ``(epoch_id, manifest_rows)``: the epoch keys its commit
+#: records and its lineage rows.
+Lineage = tuple[str | list[str] | None, list[dict[str, Any]] | None]
+
 #: Descriptor-race attempts per commit before ``ConflictError``.
 COMMIT_ATTEMPTS = 6
 
@@ -824,7 +831,8 @@ class LakeTable:
         tiebreak_col: str = "event_id",
         predicates: list[tuple] | None = None,
         columns: list[str] | None = None,
-        key_filter: Column | None = None,
+        *,
+        _key: Any = _EVERY_KEY,
     ) -> DataFrame:
         """LWW-resolved view over base ∪ deltas (merge-on-read).
 
@@ -847,11 +855,10 @@ class LakeTable:
         keeps a lang-only scan from shuffling multi-MB html blobs, and
         it reaches the parquet reader as ReadSchema pruning.
 
-        ``key_filter`` — a predicate on the key column only, applied
-        BELOW the resolution (exact: a key's winner depends only on that
-        key's rows).  For point reads (``lookup``): the few rows it keeps
-        resolve in one partition, so the read is one Spark job with no
-        exchange.
+        ``_key`` (``lookup``'s point read): keep that key's rows only,
+        filtered BELOW the resolution (exact: a key's winner depends only
+        on that key's rows), and resolve them in one partition, so the
+        read is one Spark job with no exchange.
         """
         from aus_land_data_etl_spark.operators.patch import CELL_VERS, SET_COLS, resolve
 
@@ -865,6 +872,7 @@ class LakeTable:
             keep += [c for c in columns if c in df.columns and c not in keep]
             return df.select(*keep)
 
+        hit = None if _key is _EVERY_KEY else F.col(snap.key_col) == F.lit(_key)
         if not snap.delta_files:
             # base is already one-row-per-key
             base = project(
@@ -873,12 +881,12 @@ class LakeTable:
                     predicates=predicates,
                 )
             )
-            return base if key_filter is None else base.filter(key_filter)
+            return base if hit is None else base.filter(hit)
         raw = project(
             self.read(version=version, buckets=buckets, include_deltas=True)
         )
-        if key_filter is not None:
-            raw = raw.filter(key_filter).coalesce(1)
+        if hit is not None:
+            raw = raw.filter(hit).coalesce(1)
         # per cell on a partial-image table (its marker columns survive
         # the projection), per row otherwise
         return resolve(raw, snap.key_col, snap.version_col, tiebreak_col)
@@ -937,12 +945,11 @@ class LakeTable:
         partition: one Spark job with no exchange, delta layers or not
         (a point read beside a busy ingest competes for fewer cores).
         """
-        snap = self.snapshot(version)
         key = self._normalize_key(key)
         b = self.key_bucket(key, version)
         return self.read_resolved(
             version=version, buckets=[b], tiebreak_col=tiebreak_col,
-            columns=columns, key_filter=F.col(snap.key_col) == F.lit(key),
+            columns=columns, _key=key,
         )
 
     def _normalize_key(self, key):
@@ -1037,11 +1044,9 @@ class LakeTable:
         inputs_unchanged: Callable[[Snapshot], bool] = lambda cur: True,
         conflict: str = "",
         stats: dict[str, dict[str, Any]] | None = None,
-        manifest_rows: list[dict[str, Any]] | None = None,
-        epoch_id: str | list[str] | None = None,
+        lineage: Callable[[], Lineage] = lambda: (None, None),
         wal_offsets: bool = False,
         written: dict[str, list[str]] | None = None,
-        lineage: Callable[[], tuple[list[str], list[dict[str, Any]]]] | None = None,
     ) -> int:
         """The one commit loop (Iceberg's optimistic concurrency): every
         descriptor write after ``create`` is an update of a base snapshot.
@@ -1061,21 +1066,21 @@ class LakeTable:
         for the new ones.  A lost descriptor race rebases on the
         winner, at most ``COMMIT_ATTEMPTS`` times.
 
+        ``lineage`` returns the batch's ``(epoch_id, manifest_rows)``
+        (``(None, None)`` for a commit that applies no batch).  It runs
+        once, first: a merge-on-read apply computes them beside its data
+        write, and the callable waits for them; if it raises, ``written``
+        is deleted and the error propagates.
         ``written`` — the data files this commit wrote (``_write_data``).
         Their directory is unique to this commit, so no descriptor but
         ours can reference it: a batch found already applied deletes it
         at once instead of leaving it to ``vacuum_orphans``.
-        ``lineage`` — when the batch's ``(epoch_id, manifest_rows)`` are
-        computed beside the data write (merge-on-read apply), a callable
-        that waits for them; it runs first, and if it raises, ``written``
-        is deleted and the error propagates.
         """
-        if lineage is not None:
-            try:
-                epoch_id, manifest_rows = lineage()
-            except BaseException:
-                self._discard(written)
-                raise
+        try:
+            epoch_id, manifest_rows = lineage()
+        except BaseException:
+            self._discard(written)
+            raise
         wm_rows = manifest_rows if wal_offsets else None
         cur = base
         for _attempt in range(COMMIT_ATTEMPTS):
@@ -1658,8 +1663,7 @@ class LakeTable:
             f"a commit landed in the touched buckets {sorted(touched_buckets)} "
             "since the rewrite's read snapshot; re-run against the fresh snapshot",
             stats=stats,
-            manifest_rows=manifest_rows,
-            epoch_id=epoch_id,
+            lineage=lambda: (epoch_id, manifest_rows),
             wal_offsets=wal_offsets,
             written=new_files,
         )
@@ -1671,7 +1675,7 @@ class LakeTable:
         manifest_rows: list[dict[str, Any]] | None = None,
         epoch_id: str | list[str] | None = None,
         wal_offsets: bool = False,
-        lineage: Callable[[], tuple[list[str], list[dict[str, Any]]]] | None = None,
+        lineage: Callable[[], Lineage] | None = None,
     ) -> int:
         """Merge-on-read commit: append the batch's rows as fanout (``"*"``)
         delta files, with no shuffle (``_write_data``).
@@ -1723,11 +1727,9 @@ class LakeTable:
             base,
             update,
             stats=stats,
-            manifest_rows=manifest_rows,
-            epoch_id=epoch_id,
+            lineage=lineage or (lambda: (epoch_id, manifest_rows)),
             wal_offsets=wal_offsets,
             written=written,
-            lineage=lineage,
         )
 
     def commit_clustered_deltas(

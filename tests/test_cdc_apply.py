@@ -487,12 +487,15 @@ def test_failed_manifest_job_leaves_no_thread_or_write(spark, tmp_path, monkeypa
 def test_write_sized_from_plan_estimate(spark, tmp_path):
     """The write's task count comes from the input plan's size estimate,
     with no job: a 150-row batch over 3 parquet files writes ONE delta
-    file, and an RDD-backed input (unknown size, ``Long.MaxValue``)
-    keeps its own partitioning instead of overflowing ``coalesce``."""
+    file; a 6,000-event WAL as the engine's own writer lays it out gets
+    the 2 tasks of about 4,000 rows each that the row count would give;
+    and an RDD-backed input (unknown size, ``Long.MaxValue``) keeps its
+    own partitioning instead of overflowing ``coalesce``."""
     from aus_land_data_etl_spark.cdc.apply import write_tasks
 
     batch = _wal_batch(spark, tmp_path / "wal")
     assert batch.rdd.getNumPartitions() == 3 and write_tasks(batch) == 1
+    assert write_tasks(_wal_batch(spark, tmp_path / "big", n=6_000, n_files=4)) == 2
     t = create_pages_table(spark, str(tmp_path / "t"), n_buckets=4)
     apply_batch(t, batch, epoch=0)
     assert len(t.snapshot().delta_files["*"]) == 1
